@@ -27,8 +27,8 @@ package graft.operators
   * lease release), and that cleanup must not race a still-running `b`
   * writing into the directories being removed. The join is bounded so
   * a side stuck in non-interruptible I/O cannot convert one failure
-  * into a hang; next-run healing covers that corner as it does for a
-  * crashed process. */
+  * into a hang; what such a side leaves behind is an unreferenced
+  * segment, which vacuum reaps as it does for a crashed writer's. */
 private[graft] object Par {
 
   def two[A, B](a: => A, b: => B): (A, B) = {

@@ -576,8 +576,8 @@ object Similarity {
     * under FROZEN centroids + codebooks: (vec_id, home cell, 4 codes)
     * as one shuffle-free narrow scan — shared by the full build
     * ([[writeIvfPqIndexOn]]) and the incremental merge
-    * ([[ivfPqCompact]]), so both paths encode bit-identically by
-    * construction. */
+    * ([[ivfPqCompactManifest]]), so both paths encode bit-identically
+    * by construction. */
   private def pqEncodeOn(emb: DataFrame,
       cents: Array[(Int, Array[Double])],
       cb: Array[Array[Array[Double]]]): DataFrame = {
@@ -617,7 +617,6 @@ object Similarity {
       queryId: Long = 0L, k: Int = 10, nProbe: Int = 3,
       model: Option[(Array[(Int, Array[Double])],
         Array[Array[Array[Double]]])] = None): DataFrame = {
-    graft.store.IndexCommit.recoverForRead(s, indexPath) // reader-side healing
     // model state is frozen per index: a lifecycle that already
     // collected it passes it through instead of re-aggregating the
     // corpus (one labelCentroids scan + one codebook collect saved)
@@ -656,7 +655,6 @@ object Similarity {
       broadcastProbes: Boolean = true,
       model: Option[(Array[(Int, Array[Double])],
         Array[Array[Array[Double]]])] = None): DataFrame = {
-    graft.store.IndexCommit.recoverForRead(s, indexPath) // reader-side healing
     val (centsI, cb) = model.getOrElse(
       (collectCentroids(labelCentroids(s, dir), "label"),
         pqCodebooks(s, dir)))
@@ -723,105 +721,6 @@ object Similarity {
         scratch.toString)
       val queries = t(s, dir, "embeddings")
         .filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val topk = ivfPqProbeIndexedBatch(s, dir, scratch.toString,
-        queries, k, nProbe, model = Some((cents, cb)))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-          r.getDouble(3), r.getInt(4)))
-      import s.implicits._
-      topk.toSeq.toDF("q_id", "vec_id", "cell", "adc_dist", "rn")
-        .orderBy("q_id", "rn")
-    } finally {
-      deleteScratch(s, scratch)
-    }
-  }
-
-  /** Incremental IVF-PQ index maintenance — [[ivfCompact]]'s asymmetry
-    * at the CODES level, the billion-vector deployment's steady state:
-    * centroids AND codebooks are FROZEN (retraining either invalidates
-    * every stored code and IS a rebuild), the arriving batch is encoded
-    * by the shared [[pqEncodeOn]] projection (12 bits + id per vector —
-    * the batch's index payload is ~170× smaller than its embeddings),
-    * and only the TOUCHED `cell=` partitions of the codes store are
-    * rewritten: their existing codes read partition-pruned, merged with
-    * the new ones, staged and published through the
-    * [[graft.store.IndexCommit]] atomic-marker protocol (see
-    * [[ivfCompact]] — crash leaves the codes store exactly-old or
-    * exactly-new, and an empty arriving batch is an explicit no-op).
-    * Untouched partitions keep their exact files (spec-asserted
-    * byte-for-byte). Per-batch work scales with the batch and its home
-    * cells, never with index size; nothing embedding-sized is stored
-    * or shuffled on the existing-index side at all — the staged slice
-    * is code rows (ints), the cheapest possible staging.
-    *
-    * `statsTable`: as [[ivfCompact]] — refresh ANALYZE stats when the
-    * codes store is catalog-registered.
-    *
-    * Returns the touched cell ids (k-bounded metadata). */
-  def ivfPqCompact(s: SparkSession, indexPath: String,
-      arriving: DataFrame, cents: Array[(Int, Array[Double])],
-      cb: Array[Array[Array[Double]]],
-      statsTable: Option[String] = None): Seq[Int] = {
-    import graft.store.IndexCommit
-    val coded = pqEncodeOn(arriving, cents, cb)
-    val touched = coded.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.isEmpty) return Seq.empty
-    val txn = IndexCommit.begin(s, indexPath)
-    try {
-      val existing = s.read.parquet(s"$indexPath/codes")
-        .filter(col("cell").isin(touched: _*)) // partition-pruned read
-        .select(col("vec_id"), col("cell"),
-          col("c0"), col("c1"), col("c2"), col("c3"))
-      existing.unionByName(coded)
-        .transform(graft.plans.Writers.byKeysN(_, touched.size, col("cell"))) // one writer task per touched cell
-        .write.mode("overwrite").partitionBy("cell")
-        .option("compression", "zstd")
-        .parquet(txn.stagingDir("codes").toString)
-      IndexCommit.commit(txn,
-        IndexCommit.replaceOpsFor(txn, "codes", "codes",
-          partitionDepth = 1))
-    } catch { case t if scala.util.control.NonFatal(t) =>
-      IndexCommit.releaseOnFailure(txn); throw t // see lshCompact
-    }
-    statsTable.foreach(
-      graft.models.Catalog.refreshStatsAfterMutation(s, _))
-    touched
-  }
-
-  /** `ann_ivfpq_compact` gate — the compaction lifecycle for the
-    * PQ-coded index, value-checked THROUGH the oracle's full math
-    * replay rather than a planted-rank-1 claim: PQ quantizes distances,
-    * so distinct vectors can legitimately tie at the same ADC distance
-    * (any vector sharing the query's 4 codes sits at distance 0 for a
-    * seed query) and rank-1 identity is not closed-form — but the full
-    * probe RELATION is deterministic (rank ties break on vec_id), and
-    * compaction ≡ rebuild means the stored lane must reproduce the
-    * DuckDB replay of the WHOLE IVF-PQ math over the planted corpus
-    * exactly. The base index holds only the historical slice
-    * (vec_id % 10 != 3); the arriving batch (the % 10 == 3 slice PLUS
-    * planted copies of the `n` probe seeds) reaches the index ONLY
-    * through [[ivfPqCompact]]'s touched-cell merge; the probe is the
-    * production query-relation lane ([[ivfPqProbeIndexedBatch]]) over
-    * the stored layout. Oracle = `ann_ivfpq_batch`'s replay with the
-    * corpus extended by the planted copies — hash equality proves
-    * build + merge + store + probe end-to-end. */
-  def ivfPqCompactPlanted(s: SparkSession, dir: String, n: Int = 5,
-      k: Int = 10, nProbe: Int = 3): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val isBatch = col("vec_id") % 10 === 3
-    val arriving = emb.filter(isBatch).unionByName(
-      emb.filter(col("vec_id") < n)
-        .withColumn("vec_id", col("vec_id") + Dedup.PlantOffset))
-    val cents = collectCentroids(labelCentroids(s, dir), "label")
-    val cb = pqCodebooks(s, dir)
-    val scratch = scratchDir(s, "graft-pqc-")
-    try {
-      writeIvfPqIndexOn(emb.filter(!isBatch), cents, cb,
-        scratch.toString)
-      ivfPqCompact(s, scratch.toString, arriving, cents, cb)
-      val queries = emb.filter(col("vec_id") < n)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       val topk = ivfPqProbeIndexedBatch(s, dir, scratch.toString,
         queries, k, nProbe, model = Some((cents, cb)))
@@ -1660,11 +1559,6 @@ object Similarity {
   def lshProbeIndexed(s: SparkSession, indexPath: String,
       queries: DataFrame, k: Int = 10, planes: Int = 4,
       bands: Int = 8, broadcastProbes: Boolean = true): DataFrame = {
-    // heal any COMMITTED-but-unapplied maintenance txn first — the
-    // reader half of the IndexCommit old-state-or-new-state guarantee
-    // (roll-forward only: a live writer's staging is never touched; a
-    // healthy index pays one existence check)
-    graft.store.IndexCommit.recoverForRead(s, indexPath)
     // cast probe keys to the scan's inferred partition-column types so
     // the join keys are bare partition attributes (DPP-eligible)
     val qsig = queries.select(col("q_id"),
@@ -1720,180 +1614,6 @@ object Similarity {
       }
       s.createDataFrame(rows)
         .toDF("q_id", "vec_id", "rn", "is_exact", "agrees_memory")
-        .orderBy("q_id")
-    } finally {
-      deleteScratch(s, scratch)
-    }
-  }
-
-  /** Incremental LSH index maintenance — [[ivfCompact]]'s asymmetry
-    * applied to the banded-signature layout: an arriving vector batch
-    * merges into an existing [[writeLshIndex]] index WITHOUT a full
-    * rebuild. The hyperplanes are FROZEN (they are derived from the
-    * plane/band parameters, never trained — re-parameterizing
-    * invalidates every stored posting and IS a rebuild), each new
-    * vector lands in exactly `bands` `(band, bucket)` partitions, and
-    * only those TOUCHED partitions are rewritten: their existing
-    * postings are read partition-pruned, merged with the new ones, and
-    * replaced via dynamic partition overwrite, while untouched bucket
-    * dirs keep their exact files (spec-asserted byte-for-byte). The
-    * narrow vector store APPENDS the batch — no partition key there,
-    * and the rerank hydrates by `vec_id` join, so append is O(batch).
-    * Per-batch work scales with `batch × bands`, never with index size.
-    *
-    * Crash-atomicity ([[graft.store.IndexCommit]]): the merged touched
-    * partitions AND the vectors append segment are STAGED under the
-    * index's `_graft_txn` dir, logged, and published through one
-    * atomic commit-marker rename — a crash at any point leaves the
-    * index exactly-old (pre-marker: recovery rolls the staging back)
-    * or exactly-new (post-marker: recovery replays the logged moves),
-    * never the mixed postings-new/vectors-old state the direct
-    * dynamic-overwrite + append sequence could strand. Staging to a
-    * sibling dir also removes the read-while-overwriting hazard, so
-    * the touched slice no longer needs eager materialization. The
-    * touched slice stays bounded by the touched buckets' posting
-    * volume (longs, not vectors); touched-partition count is bounded
-    * above by BOTH `batch × bands` and the layout's `2^planes × bands`
-    * total, so the pruning predicate (per-band bucket IN-lists) stays
-    * a bands-sized OR of partition-column conjunctions — statically
-    * prunable at scan planning.
-    *
-    * An EMPTY arriving batch (a legitimate streaming trigger outcome —
-    * and, with `upsertById`, a fully re-delivered batch) is an explicit
-    * no-op: `Seq.empty`, transaction aborted (this lane's guard reads
-    * the live store, so it opens under the writer lease — round 12 —
-    * and releases it on the early-out), index byte-identical.
-    *
-    * `upsertById`: when true, arriving rows whose `vec_id` is already
-    * in the vectors store are DROPPED before anything is staged — for
-    * immutable (vec_id, embedding) facts, skip ≡ replace, so the merge
-    * becomes IDEMPOTENT under re-delivery (merge∘merge = merge, the
-    * [[ivfCompact]] `upsertById` contract; without it a replayed batch
-    * duplicates both the vector rows and their postings). The guard is
-    * an anti-join against the vectors store's `vec_id` column only — a
-    * narrow one-column scan, never vector bytes.
-    *
-    * `statsTable`: as [[ivfCompact]] — refresh ANALYZE stats when the
-    * postings store is catalog-registered, so the CBO never plans the
-    * post-compaction table on pre-compaction cardinalities.
-    *
-    * Returns the touched (band, bucket) pairs (bounded metadata). */
-  def lshCompact(s: SparkSession, indexPath: String, arriving: DataFrame,
-      planes: Int = 4, bands: Int = 8,
-      statsTable: Option[String] = None,
-      upsertById: Boolean = false): Seq[(Int, Int)] = {
-    import graft.store.IndexCommit
-    // begin FIRST (writer lease + heal): the upsert guard and the
-    // touched scan below consult the live store — taking the lease
-    // before the first read means (a) a crashed predecessor's
-    // committed state is healed in, and (b) no concurrent writer can
-    // move the store between the guard read and the staged merge (the
-    // round-12 writer-lease contract). An empty effective batch
-    // aborts the transaction (lease released, live tree untouched).
-    val txn = IndexCommit.begin(s, indexPath)
-    val touched =
-      try {
-        val fresh =
-          if (upsertById)
-            arriving.join(s.read.parquet(s"$indexPath/vectors")
-              .select("vec_id"), Seq("vec_id"), "left_anti")
-          else arriving
-        // cast to the partitioned read's inferred types (int/int) so the
-        // merge union and the staged write target identical partition
-        // values
-        val newPostings = fresh.select(col("vec_id"),
-          posexplode(graft.functions.SketchExpressions.hyperplaneBands(
-            col("embedding"), planes, bands)).as(Seq("band", "bucket")))
-          .select(col("vec_id"), col("band").cast("int").as("band"),
-            col("bucket").cast("int").as("bucket"))
-        val touched0 = newPostings.select("band", "bucket").distinct()
-          .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
-        if (touched0.isEmpty) { IndexCommit.abort(txn); return Seq.empty }
-        val touchedPred = touched0.groupBy(_._1).toSeq.map { case (b, bks) =>
-          col("band") === b && col("bucket").isin(bks.map(_._2): _*)
-        }.reduce(_ || _)
-        val existing = s.read.parquet(s"$indexPath/postings")
-          .filter(touchedPred) // partition-pruned read of touched dirs
-          .select(col("vec_id"), col("band"), col("bucket"))
-        // the two staged writes hit disjoint staging dirs from
-        // independent plans — overlap them (guide §2.6); the lease
-        // check runs once after the pair, with the live tree still
-        // untouched either way
-        Par.two(
-          existing.unionByName(newPostings)
-            .transform(graft.plans.Writers.byKeysN(_, touched0.size,
-              col("band"), col("bucket")))
-            .write.mode("overwrite").partitionBy("band", "bucket")
-            .option("compression", "zstd")
-            .parquet(txn.stagingDir("postings").toString),
-          fresh.select(col("vec_id"), col("embedding"))
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .parquet(txn.stagingDir("vectors").toString))
-        txn.heartbeat() // lease still ours before the atomic publish
-        IndexCommit.commit(txn,
-          IndexCommit.replaceOpsFor(txn, "postings", "postings",
-            partitionDepth = 2) ++
-            IndexCommit.appendOpsFor(txn, "vectors", "vectors"))
-        touched0
-      } catch { case t if scala.util.control.NonFatal(t) =>
-        // NON-FATAL exception is a transient FAILURE, not a crash: roll
-        // marker-less staging back and release the lease NOW instead of
-        // holding the index for a whole lease term; a committed txn is
-        // left for roll-forward healing. Fatal errors (VM death) fall
-        // through untouched: that IS a crash, and the lease-expiry +
-        // healing protocol owns it.
-        IndexCommit.releaseOnFailure(txn); throw t
-      }
-    statsTable.foreach(
-      graft.models.Catalog.refreshStatsAfterMutation(s, _))
-    touched
-  }
-
-  /** `ann_lsh_compact` gate — the [[ivfCompactPlanted]] lifecycle for
-    * the LSH index: base index built from the historical corpus
-    * (vec_id % 10 != 3), an arriving batch (the % 10 == 3 slice PLUS
-    * planted exact copies of the `n` probe queries) merged through
-    * [[lshCompact]], probed through the stored partition-pruned lane.
-    * The reference is the in-memory batch lane over the FULL corpus —
-    * a from-scratch [[writeLshIndex]] rebuild holds exactly those
-    * postings (identical frozen hyperplanes ⇒ identical signatures),
-    * and stored≡memory on an identical corpus is already value-pinned
-    * by `ann_lsh_indexed`, so memory-lane equality here isolates
-    * exactly the compaction path. Closed form: the planted copies
-    * exist ONLY in the arriving batch, so rank-1 recovery at cosine
-    * ~1.0 proves the batch reached the index through the merge, and
-    * `agrees_rebuild` pins compaction ≡ rebuild row-for-row. */
-  def lshCompactPlanted(s: SparkSession, dir: String, n: Int = 5,
-      k: Int = 10): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val isBatch = col("vec_id") % 10 === 3
-    val base = emb.filter(!isBatch)
-    val arriving = emb.filter(isBatch).unionByName(
-      emb.filter(col("vec_id") < n)
-        .withColumn("vec_id", col("vec_id") + Dedup.PlantOffset))
-    val queries = emb.filter(col("vec_id") < n)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val scratch = scratchDir(s, "graft-lshc-")
-    try {
-      writeLshIndexOn(base, scratch.toString, 4, 8)
-      lshCompact(s, scratch.toString, arriving, 4, 8)
-      def keyed(df: DataFrame): Map[Long, Seq[(Long, Double, Int)]] =
-        df.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-          .groupBy(_._1)
-          .map { case (q, rows) =>
-            q -> rows.sortBy(_._4).map(t => (t._2, t._3, t._4)).toSeq
-          }
-      val (stored, memory) = Par.two(
-        keyed(lshProbeIndexed(s, scratch.toString, queries, k)),
-        keyed(lshTopKBatchOn(plantedEmb(emb, n), queries, k)))
-      val rows = (0L until n.toLong).map { qid =>
-        val b = stored(qid)
-        (qid, b.head._1, 1, b.head._2 >= 0.999999, b == memory(qid))
-      }
-      s.createDataFrame(rows)
-        .toDF("q_id", "vec_id", "rn", "is_exact", "agrees_rebuild")
         .orderBy("q_id")
     } finally {
       deleteScratch(s, scratch)
@@ -2040,8 +1760,6 @@ object Similarity {
     * layout alone. */
   def ivfProbeIndexed(s: SparkSession, indexPath: String,
       query: Array[Float], k: Int = 10, nProbe: Int = 4): DataFrame = {
-    // reader-side healing on the cell store (ivfCompact's txn root)
-    graft.store.IndexCommit.recoverForRead(s, s"$indexPath/vectors")
     // centroids may be stored float (sampled index) or double (trained
     // index); widen to double — exact for floats, and the same values
     // the build-side argmax expression saw
@@ -2092,7 +1810,6 @@ object Similarity {
       queries: Seq[(Long, Array[Float])], k: Int = 10,
       nProbe: Int = 4,
       model: Option[Array[(Long, Array[Double])]] = None): DataFrame = {
-    graft.store.IndexCommit.recoverForRead(s, s"$indexPath/vectors")
     val cents = model.getOrElse(
       s.read.parquet(s"$indexPath/centroids")
         .select(col("cent_id"), col("centroid").cast("array<double>"))
@@ -2174,7 +1891,6 @@ object Similarity {
     // `model`: pre-collected centroids (the ivfProbeIndexedMulti
     // discipline) — gates that trained and wrote the table skip
     // re-reading their own write; values identical either way.
-    graft.store.IndexCommit.recoverForRead(s, s"$indexPath/vectors")
     val cents = model.getOrElse(
       s.read.parquet(s"$indexPath/centroids")
         .select(col("cent_id"), col("centroid").cast("array<double>"))
@@ -2474,200 +2190,6 @@ object Similarity {
     }
   }
 
-  /** Incremental IVF index maintenance: merge an arriving vector batch
-    * into an existing index WITHOUT retraining and WITHOUT a full
-    * rebuild. Centroids are FROZEN (maintenance never moves cells — a
-    * retrain invalidates every stored assignment and IS a rebuild); each
-    * new vector is assigned to its frozen-argmax home cell, and only the
-    * TOUCHED `cell=` partitions are rewritten — existing rows of those
-    * cells merged with the new ones via dynamic partition overwrite, the
-    * [[graft.operators.Dedup.incrementalDedup]] lane's asymmetry applied
-    * to index storage: per-batch work scales with the batch and the
-    * cells it lands in, never with index size. Untouched partitions'
-    * files are not rewritten (spec-asserted byte-for-byte).
-    *
-    * Crash-atomicity ([[graft.store.IndexCommit]]): the merged touched
-    * cells are STAGED under the store's `_graft_txn` dir and published
-    * through the one-rename commit marker, so a crash mid-maintenance
-    * leaves the cell store exactly-old or exactly-new — never some
-    * cells rewritten and others not (the mixed state the direct
-    * dynamic partition overwrite could strand across its per-partition
-    * moves). Staging to a sibling dir also removes the
-    * read-while-overwriting hazard, so the touched slice no longer
-    * needs eager materialization; it stays bounded by the touched
-    * cells' volume, not the index. An EMPTY arriving batch is an
-    * explicit no-op (`Seq.empty`, no transaction, store untouched) —
-    * previously this held only incidentally via the empty `isin()`.
-    *
-    * `statsTable`: when the vectors store is also registered as a
-    * catalog table, pass its name so the compaction refreshes its
-    * ANALYZE statistics ([[graft.models.Catalog.refreshStatsAfterMutation]]
-    * — the round-9 verdict's stats-maintenance tie-in: without it the
-    * CBO plans the post-compaction table on pre-compaction
-    * cardinalities, which StatsMaintenanceSpec pins as a real plan
-    * divergence).
-    *
-    * `upsertById`: when true, existing rows whose `vec_id` appears in
-    * the arriving batch are REPLACED instead of duplicated (an
-    * anti-join on the touched slice — bounded by the touched cells'
-    * volume, never the index). This makes the merge IDEMPOTENT under
-    * re-delivery (merge∘merge = merge, the U1 load∘load=load
-    * discipline), which is what lets a streaming `foreachBatch`
-    * replay a micro-batch after a restart without corrupting the
-    * index ([[graft.streaming.VectorStream.runIvfCompactOnce]]).
-    * Caveat, documented not hidden: an arriving vector whose NEW
-    * embedding argmaxes to a different cell leaves its old-cell row
-    * in place (the old cell is not touched); upsert covers
-    * re-delivery of immutable (vec_id, embedding) facts — a true
-    * re-embedding flow deletes first (the forget_gate lifecycle).
-    *
-    * Returns the touched cell ids (k-bounded metadata). */
-  def ivfCompact(s: SparkSession, vectorsPath: String,
-      arriving: DataFrame,
-      trained: Array[(Int, Array[Double])],
-      statsTable: Option[String] = None,
-      upsertById: Boolean = false): Seq[Int] = {
-    import graft.store.IndexCommit
-    val assigned = arriving.select(col("vec_id"), col("embedding"),
-      argmaxOver(trained).getField("cluster").as("cell"))
-    val touched = assigned.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.isEmpty) return Seq.empty
-    val txn = IndexCommit.begin(s, vectorsPath)
-    try {
-      val existingAll = s.read.parquet(vectorsPath)
-        .filter(col("cell").isin(touched: _*)) // partition-pruned read
-        .select(col("vec_id"), col("embedding"), col("cell"))
-      val existing =
-        if (upsertById)
-          existingAll.join(assigned.select("vec_id"), Seq("vec_id"),
-            "left_anti")
-        else existingAll
-      existing.unionByName(assigned)
-        .transform(graft.plans.Writers.byKeysN(_, touched.size, col("cell"))) // one writer task per touched cell
-        .write.mode("overwrite").partitionBy("cell")
-        .option("compression", "zstd")
-        .parquet(txn.stagingDir("cells").toString)
-      IndexCommit.commit(txn,
-        IndexCommit.replaceOpsFor(txn, "cells", "", partitionDepth = 1))
-    } catch { case t if scala.util.control.NonFatal(t) =>
-      IndexCommit.releaseOnFailure(txn); throw t // see lshCompact
-    }
-    statsTable.foreach(
-      graft.models.Catalog.refreshStatsAfterMutation(s, _))
-    touched
-  }
-
-  /** Contract gate for [[ivfCompact]] — the multi-batch lifecycle real
-    * deployments run (the round-7 verdict's maintenance item): an index
-    * built from the historical corpus (vec_id % 10 != 3), an arriving
-    * batch (the % 10 == 3 slice PLUS planted exact copies of the `n`
-    * probe queries) merged through compaction, and as the reference the
-    * from-scratch rebuild relation — the full vector set assigned under
-    * the identical frozen centroids, probed through the identical plan
-    * (a rebuilt index holds exactly those rows in exactly those cells,
-    * so probing the cached assignment IS probing the rebuild, minus
-    * gate-irrelevant file I/O).
-    *
-    * Two deterministic expectations, both closed-form:
-    *  - the planted copies live ONLY in the arriving batch, so a probe
-    *    finding `q + PlantOffset` at rank 1 with cosine ~1.0 proves the
-    *    batch genuinely reached the index through the compaction path
-    *    (same argmax ⇒ same home cell ⇒ same probed partition);
-    *  - the compacted index's full top-k agrees row-for-row with the
-    *    rebuild's (`agrees_rebuild`) — compaction is equivalent to
-    *    rebuild, which is the entire point of maintenance.
-    * Precondition as for every planted ANN gate: no natural pair
-    * reaches t6-cosine 0.999999 (measured maxima ~0.98). */
-  def ivfCompactPlanted(s: SparkSession, dir: String, n: Int = 5,
-      k: Int = 10, nProbe: Int = 4): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val isBatch = col("vec_id") % 10 === 3
-    val base = emb.filter(!isBatch)
-    val arriving = emb.filter(isBatch).unionByName(
-      emb.filter(col("vec_id") < n)
-        .withColumn("vec_id", col("vec_id") + Dedup.PlantOffset))
-    val trained = collectCentroids(kmeansIterate(s, dir, 2), "cluster")
-    val scratch = scratchDir(s, "graft-ivfc-")
-    // the argmax assignment runs ONCE over base ∪ arriving and persists;
-    // the base index and the rebuild reference are both projections of it
-    // (one corpus-scale cosine pass instead of two — the compaction
-    // itself re-assigns only the arriving batch, which is the cheap side)
-    // the planted test is the EXACT [PlantOffset, PlantOffset+n) range,
-    // not an open-ended >= — the 30x rehearsal corpus carries replica
-    // ids above PlantOffset, and an open-ended predicate silently
-    // dropped every replica vector from the live index while the
-    // rebuild reference kept them (agrees_rebuild false at 30x; found
-    // by value-checking the gate at rehearsal scale, invisible at the
-    // contract SFs where no id exceeds the offset)
-    val isArriving = col("vec_id") % 10 === 3 ||
-      (col("vec_id") >= Dedup.PlantOffset &&
-        col("vec_id") < Dedup.PlantOffset + n)
-    val assignedAll = base.unionByName(arriving)
-      .select(col("vec_id"), col("embedding"),
-        argmaxOver(trained).getField("cluster").as("cell"))
-      .persist()
-    try {
-      val live = s"$scratch/live"
-      import s.implicits._
-      // vectors and centroids are disjoint outputs — overlap (§2.6);
-      // this also materializes the assignedAll cache both probe lanes
-      // reuse below
-      Par.two(
-        assignedAll.filter(!isArriving)
-          .transform(graft.plans.Writers.byKeysN(_, trained.length,
-            col("cell")))
-          .write.mode("overwrite").partitionBy("cell")
-          .option("compression", "zstd")
-          .parquet(s"$live/vectors"),
-        trained.toSeq.map { case (c, v) => (c.toLong, v.toSeq) }
-          .toDF("cent_id", "centroid")
-          .coalesce(1).write.mode("overwrite").parquet(s"$live/centroids"))
-      // the compaction commit and the probe-query collect touch
-      // disjoint state (store mutation vs source-table read) — overlap
-      // (§2.6)
-      val (_, queries) = Par.two(
-        ivfCompact(s, s"$live/vectors", arriving, trained),
-        emb.filter(col("vec_id") < n)
-          .select(col("vec_id"), col("embedding")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-          .sortBy(_._1))
-      // one probe job per LANE (not per query) — semantics identical to
-      // the per-query ivfProbeIndexed + self-filter loop
-      def reduceTopk(df: DataFrame): Map[Long, Array[(Long, Double)]] =
-        df.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          .groupBy(_._1)
-          .map { case (q, hits) =>
-            q -> hits.filter(_._2 != q).map(h => (h._2, h._3))
-          }
-      // live lane: the REAL storage path — stored centroids, stored
-      // hive-partitioned vectors, partition-pruned probe
-      val (liveTop, rebuildTop) = Par.two(
-        reduceTopk(
-          ivfProbeIndexedMulti(s, live, queries.toSeq, k, nProbe,
-            model = Some(trained.map { case (c, v) => (c.toLong, v) }))),
-        reduceTopk(multiProbeOn(assignedAll,
-          trained.map { case (c, v) => (c.toLong, v) },
-          queries.toSeq, k, nProbe)))
-      // rebuild reference: same probe plan over the cached full
-      // assignment — a from-scratch index holds exactly these rows in
-      // exactly these cells, so materializing it would change no probed
-      // row, only add file I/O to the gate
-      val rows = queries.map { case (qid, _) =>
-        val a = liveTop(qid)
-        val b = rebuildTop(qid)
-        (qid, a.head._1, 1, a.head._2 >= 0.999999, a.sameElements(b))
-      }
-      s.createDataFrame(rows.toSeq)
-        .toDF("q_id", "vec_id", "rn", "is_exact", "agrees_rebuild")
-        .orderBy("q_id")
-    } finally {
-      assignedAll.unpersist()
-      deleteScratch(s, scratch)
-    }
-  }
-
   /** [[writeLshIndex]]'s layout over a multi-table
     * [[graft.store.ManifestStore]]: the `(band, bucket)`-keyed postings
     * table (key rendered `band_bucket`, layout-only — band and bucket
@@ -2690,19 +2212,30 @@ object Similarity {
         emb.select(col("vec_id"), col("embedding")))))
   }
 
-  /** [[lshCompact]] over the manifest store — incremental LSH
-    * maintenance where the touched `(band, bucket)` posting partitions
-    * AND the vectors append land in ONE atomic manifest commit: a
-    * reader sees postings-new with vectors-new or postings-old with
-    * vectors-old, never the mixed state, with no redo log, no healing
-    * protocol, and no mid-swap window (snapshot isolation — the
-    * [[graft.store.ManifestStore]] claims). Semantics identical to
-    * [[lshCompact]]: frozen hyperplanes, per-batch work bounded by
-    * batch × bands, `upsertById` re-delivery idempotence via the
-    * narrow anti-join against the live vectors table — which runs
-    * INSIDE the commit's planning closure, i.e. under the writer
-    * lease, the same guard-read discipline lshCompact gets from
-    * opening its transaction first.
+  /** Incremental LSH index maintenance over the manifest store: an
+    * arriving vector batch merges into a [[writeLshIndexManifest]]
+    * index WITHOUT a full rebuild. The hyperplanes are FROZEN (derived
+    * from the plane/band parameters, never trained — re-parameterizing
+    * invalidates every stored posting and IS a rebuild), each new
+    * vector lands in exactly `bands` `(band, bucket)` partitions, and
+    * only those TOUCHED posting partitions are read back, merged and
+    * re-staged; the narrow vectors table takes the batch as one append
+    * segment. Per-batch work scales with `batch × bands`, never with
+    * index size.
+    *
+    * Both tables land in ONE atomic manifest commit: a reader sees
+    * postings-new with vectors-new or postings-old with vectors-old,
+    * never the mixed state, and never a partition mid-swap (snapshot
+    * isolation — the [[graft.store.ManifestStore]] claims). An empty
+    * effective batch commits nothing.
+    *
+    * `upsertById`: arriving rows whose `vec_id` is already in the
+    * vectors table are DROPPED before anything is staged — for
+    * immutable (vec_id, embedding) facts skip ≡ replace, so the merge
+    * is IDEMPOTENT under re-delivery (merge∘merge = merge). The guard
+    * is a narrow one-column anti-join that runs INSIDE the commit's
+    * planning closure, i.e. under the writer lease, so no concurrent
+    * writer can move the store between the guard read and the commit.
     *
     * Returns the touched (band, bucket) pairs (bounded metadata). */
   def lshCompactManifest(s: SparkSession, rootPath: String,
@@ -2774,17 +2307,19 @@ object Similarity {
       .orderBy("q_id", "rn")
   }
 
-  /** `ann_lsh_compact_mf` gate — the [[lshCompactPlanted]] lifecycle
-    * over the multi-table manifest store: base index via
-    * [[writeLshIndexManifest]], arriving batch (held-out slice +
-    * planted copies) merged through ONE atomic postings+vectors
-    * commit, probed manifest-pruned. Reference: the in-memory batch
-    * lane over the full corpus (the lshCompactPlanted argument —
+  /** `ann_lsh_compact` / `ann_lsh_compact_mf` gate — the LSH
+    * maintenance lifecycle: base index built from the historical
+    * corpus (vec_id % 10 != 3), an arriving batch (the % 10 == 3 slice
+    * PLUS planted exact copies of the `n` probe queries) merged through
+    * ONE atomic postings+vectors commit, probed manifest-pruned. The
+    * reference is the in-memory batch lane over the FULL corpus —
     * identical frozen hyperplanes ⇒ identical signatures ⇒ a rebuild
-    * holds exactly these postings). Same closed form: planted copies
-    * exist only in the arriving batch, rank-1 at cosine ~1.0 proves
-    * the batch reached the index through the commit, `agrees_rebuild`
-    * pins compaction ≡ rebuild row-for-row. */
+    * holds exactly these postings, and stored ≡ memory on an identical
+    * corpus is already value-pinned by `ann_lsh_indexed`. Closed form:
+    * the planted copies exist ONLY in the arriving batch, so rank-1
+    * recovery at cosine ~1.0 proves the batch reached the index
+    * through the commit, and `agrees_rebuild` pins compaction ≡
+    * rebuild row-for-row. */
   def lshCompactManifestPlanted(s: SparkSession, dir: String, n: Int = 5,
       k: Int = 10): DataFrame = {
     val emb = t(s, dir, "embeddings")
@@ -2798,8 +2333,7 @@ object Similarity {
     val scratch = scratchDir(s, "graft-lshmf-")
     try {
       val live = s"$scratch/live"
-      // DEFAULT-protocol facades, no protocol argument: this gate IS
-      // the library's default LSH lifecycle, oracle-checked
+      // the library's LSH lifecycle facades, oracle-checked
       buildLshIndex(s, base, live, 4, 8)
       maintainLshIndex(s, live, arriving, 4, 8)
       def keyed(df: DataFrame): Map[Long, Seq[(Long, Double, Int)]] =
@@ -2824,25 +2358,37 @@ object Similarity {
     }
   }
 
-  /** [[ivfCompact]] over a [[graft.store.ManifestStore]] — the
-    * versioned-manifest deployment of IVF maintenance (round-12: the
-    * object-store-honest commit path). Semantics are IDENTICAL to
-    * [[ivfCompact]]: frozen centroids, arriving vectors assigned to
-    * their frozen-argmax home cells, only the touched cells merged
-    * (with the same `upsertById` re-delivery contract); what changes is
-    * the storage protocol — the merged cells land as a new IMMUTABLE
-    * segment and the commit is one manifest create, so
+  /** Incremental IVF index maintenance over a
+    * [[graft.store.ManifestStore]]: merge an arriving vector batch into
+    * an existing index WITHOUT retraining and WITHOUT a full rebuild.
+    * Centroids are FROZEN (maintenance never moves cells — a retrain
+    * invalidates every stored assignment and IS a rebuild); each new
+    * vector is assigned to its frozen-argmax home cell, and only the
+    * TOUCHED cells are read back, merged and staged as a new IMMUTABLE
+    * segment — per-batch work scales with the batch and the cells it
+    * lands in, never with index size. The commit is one manifest
+    * create, so
     *
     *  - concurrent probes keep snapshot isolation with NO mid-swap
-    *    window (IndexCommit's documented in-flight-scan caveat does not
-    *    exist here — nothing published ever moves);
-    *  - the store works on flat-namespace object stores, where
-    *    IndexCommit fails fast by design;
+    *    window — nothing published ever moves;
+    *  - the store works on flat-namespace object stores;
     *  - every prior version stays time-travel-readable until
-    *    [[graft.store.ManifestStore.vacuum]] retires it.
+    *    [[graft.store.ManifestStore.vacuum]] retires it;
+    *  - an EMPTY arriving batch commits nothing (no version bump).
     *
-    * Returns the touched cell ids (k-bounded metadata), as
-    * [[ivfCompact]] does. */
+    * `upsertById`: when true, live rows whose `vec_id` appears in the
+    * arriving batch are REPLACED instead of duplicated, which makes the
+    * merge IDEMPOTENT under re-delivery (merge∘merge = merge) — what
+    * lets a streaming `foreachBatch` replay a micro-batch after a
+    * restart without corrupting the index
+    * ([[graft.streaming.VectorStream.runIvfCompactManifestOnce]]).
+    * Caveat, documented not hidden: an arriving vector whose NEW
+    * embedding argmaxes to a different cell leaves its old-cell row in
+    * place (the old cell is not touched); upsert covers re-delivery of
+    * immutable (vec_id, embedding) facts — a true re-embedding flow
+    * deletes first (the forget_gate lifecycle).
+    *
+    * Returns the touched cell ids (k-bounded metadata). */
   def ivfCompactManifest(s: SparkSession, rootPath: String,
       arriving: DataFrame,
       trained: Array[(Int, Array[Double])],
@@ -2853,12 +2399,25 @@ object Similarity {
       "cell", if (upsertById) Some("vec_id") else None).map(_.toInt)
   }
 
-  /** Contract gate for [[ivfCompactManifest]] — the
-    * [[ivfCompactPlanted]] lifecycle run over the versioned-manifest
-    * store instead of the in-place hive tree, closing the loop on the
-    * same two closed-form expectations (planted copies reach the index
-    * only through the maintenance path and surface at rank 1;
-    * compaction ≡ from-scratch rebuild row-for-row).
+  /** `ann_ivf_compact` / `ann_ivf_compact_mf` gate for
+    * [[ivfCompactManifest]] — the multi-batch lifecycle real
+    * deployments run: an index built from the historical corpus
+    * (vec_id % 10 != 3), an arriving batch (the % 10 == 3 slice PLUS
+    * planted exact copies of the `n` probe queries) merged through
+    * maintenance, and as the reference the from-scratch rebuild
+    * relation — the full vector set assigned under the identical
+    * frozen centroids, probed through the identical plan. Two
+    * deterministic expectations, both closed-form:
+    *
+    *  - the planted copies live ONLY in the arriving batch, so a probe
+    *    finding `q + PlantOffset` at rank 1 with cosine ~1.0 proves the
+    *    batch genuinely reached the index through maintenance (same
+    *    argmax ⇒ same home cell ⇒ same probed partition);
+    *  - the compacted index's full top-k agrees row-for-row with the
+    *    rebuild's (`agrees_rebuild`) — compaction ≡ rebuild.
+    *
+    * Precondition as for every planted ANN gate: no natural pair
+    * reaches t6-cosine 0.999999 (measured maxima ~0.98).
     *
     * The probe is the manifest-pruning showcase: the per-query probe
     * cells are ranked driver-side against the frozen centroids (the
@@ -2866,7 +2425,7 @@ object Similarity {
     * the two lanes agree bit-for-bit) and ONLY those cells' manifest
     * entries reach the scan — at 100 TB on an object store that is
     * zero list calls over unprobed prefixes, the pruning DPP performs
-    * on the hive lane moved up into driver-side metadata. */
+    * on a hive layout moved up into driver-side metadata. */
   def ivfCompactManifestPlanted(s: SparkSession, dir: String, n: Int = 5,
       k: Int = 10, nProbe: Int = 4): DataFrame = {
     import graft.store.ManifestStore
@@ -2878,7 +2437,10 @@ object Similarity {
         .withColumn("vec_id", col("vec_id") + Dedup.PlantOffset))
     val trained = collectCentroids(kmeansIterate(s, dir, 2), "cluster")
     val scratch = scratchDir(s, "graft-ivfmf-")
-    // closed-range planted predicate — the ivfCompactPlanted 30x lesson
+    // the planted test is the EXACT [PlantOffset, PlantOffset+n) range,
+    // not an open-ended >=: the 30x rehearsal corpus carries replica
+    // ids above PlantOffset, which an open-ended predicate would drop
+    // from the live index but not from the rebuild reference
     val isArriving = col("vec_id") % 10 === 3 ||
       (col("vec_id") >= Dedup.PlantOffset &&
         col("vec_id") < Dedup.PlantOffset + n)
@@ -2888,8 +2450,7 @@ object Similarity {
       .persist()
     try {
       val live = s"$scratch/live"
-      // DEFAULT-protocol facades, no protocol argument: this gate IS
-      // the library's default IVF lifecycle, oracle-checked
+      // the library's IVF lifecycle facades, oracle-checked
       buildIvfIndex(s, live, assignedAll.filter(!isArriving), trained)
       // the maintenance commit and the probe-query collect touch
       // disjoint state (store mutation vs source-table read) — overlap
@@ -2908,14 +2469,15 @@ object Similarity {
           .map { case (q, hits) =>
             q -> hits.filter(_._2 != q).map(h => (h._2, h._3))
           }
-      // live lane: the REAL storage path through the default-protocol
+      // live lane: the REAL storage path through the lifecycle
       // facade — the probed cells' distinct set (centroid-bounded
       // metadata, ranked by the same accumulation order as the
       // CosineSim expression) prunes at the manifest level
       import s.implicits._
       // rebuild reference: same probe plan over the cached assignment
-      // (the ivfCompactPlanted argument — a rebuilt store holds exactly
-      // these rows in exactly these cells); independent of the live
+      // (a rebuilt store holds exactly these rows in exactly these
+      // cells, so materializing it would change no probed row, only
+      // add file I/O to the gate); independent of the live
       // probe, so the two lanes overlap (guide §2.6)
       val (liveTop, rebuildTop) = Par.two(
         reduceTopk(probeIvfIndex(s, live,
@@ -2947,16 +2509,19 @@ object Similarity {
       (graft.store.ManifestStore.TableDef("codes", "cell"),
         pqEncodeOn(emb, cents, cb))))
 
-  /** [[ivfPqCompact]] over the manifest store — incremental IVF-PQ
-    * maintenance under the versioned-manifest commit: frozen centroids
-    * AND codebooks (retraining either IS a rebuild), the arriving
-    * batch encoded by the shared [[pqEncodeOn]] projection (12 bits +
-    * id per vector), only the TOUCHED `cell` partitions merged into a
-    * new immutable segment, one manifest create as the commit point.
-    * Object-store-safe, snapshot-isolated, time-travel-readable — the
-    * [[ivfCompactManifest]] properties at the codes level, with the
-    * same `upsertById` re-delivery idempotence contract. Returns the
-    * touched cell ids (k-bounded metadata). */
+  /** Incremental IVF-PQ index maintenance — [[ivfCompactManifest]] at
+    * the CODES level, the billion-vector deployment's steady state:
+    * centroids AND codebooks are FROZEN (retraining either invalidates
+    * every stored code and IS a rebuild), the arriving batch is
+    * encoded by the shared [[pqEncodeOn]] projection (12 bits + id per
+    * vector — the batch's index payload is ~170× smaller than its
+    * embeddings), and only the TOUCHED `cell` partitions are merged
+    * into a new immutable segment, one manifest create as the commit
+    * point. Nothing embedding-sized is stored or shuffled on the
+    * existing-index side. Object-store-safe, snapshot-isolated,
+    * time-travel-readable, with the same `upsertById` re-delivery
+    * idempotence contract. Returns the touched cell ids (k-bounded
+    * metadata). */
   def ivfPqCompactManifest(s: SparkSession, rootPath: String,
       arriving: DataFrame, cents: Array[(Int, Array[Double])],
       cb: Array[Array[Array[Double]]],
@@ -2997,14 +2562,24 @@ object Similarity {
     pqAdcRank(codes, probes, cb, k, excludeSelf, broadcastProbes)
   }
 
-  /** `ann_ivfpq_compact_mf` gate — [[ivfPqCompactPlanted]]'s lifecycle
-    * over the versioned-manifest codes store: base index from the
-    * historical slice ([[writeIvfPqIndexManifestOn]]), the arriving
-    * batch (held-out slice + planted copies of the probe seeds) merged
-    * through [[ivfPqCompactManifest]]'s touched-cell upsert, probed
-    * manifest-pruned through the default-protocol facade. Oracle: the
-    * IDENTICAL DuckDB full-math replay as `ann_ivfpq_compact` — the
-    * commit protocol must not change one row. */
+  /** `ann_ivfpq_compact` / `ann_ivfpq_compact_mf` gate — the
+    * compaction lifecycle for the PQ-coded index, value-checked
+    * THROUGH the oracle's full math replay rather than a
+    * planted-rank-1 claim: PQ quantizes distances, so distinct vectors
+    * can legitimately tie at the same ADC distance (any vector sharing
+    * the query's 4 codes sits at distance 0 for a seed query) and
+    * rank-1 identity is not closed-form — but the full probe RELATION
+    * is deterministic (rank ties break on vec_id), and compaction ≡
+    * rebuild means the stored lane must reproduce the DuckDB replay of
+    * the WHOLE IVF-PQ math over the planted corpus exactly. The base
+    * index holds only the historical slice (vec_id % 10 != 3,
+    * [[writeIvfPqIndexManifestOn]]); the arriving batch (the % 10 == 3
+    * slice PLUS planted copies of the `n` probe seeds) reaches the
+    * index ONLY through [[ivfPqCompactManifest]]'s touched-cell upsert;
+    * the probe is the manifest-pruned query-relation lane. Oracle =
+    * `ann_ivfpq_batch`'s replay with the corpus extended by the planted
+    * copies — hash equality proves build + merge + store + probe
+    * end-to-end. */
   def ivfPqCompactManifestPlanted(s: SparkSession, dir: String,
       n: Int = 5, k: Int = 10, nProbe: Int = 3): DataFrame = {
     val emb = t(s, dir, "embeddings")
@@ -3017,8 +2592,7 @@ object Similarity {
     val scratch = scratchDir(s, "graft-pqcmf-")
     try {
       val live = s"$scratch/live"
-      // DEFAULT-protocol facades, no protocol argument: this gate IS
-      // the library's default index lifecycle, oracle-checked
+      // the library's IVF-PQ lifecycle facades, oracle-checked
       buildIvfPqIndex(s, emb.filter(!isBatch), cents, cb, live)
       maintainIvfPqIndex(s, live, arriving, cents, cb)
       val queries = emb.filter(col("vec_id") < n)
@@ -3036,179 +2610,96 @@ object Similarity {
     }
   }
 
-  // ---- protocol-selectable index lifecycle facades (round 13) ----
-  // The versioned-manifest protocol is the library DEFAULT for every
-  // materialized ANN index lifecycle ([[graft.store.IndexProtocol]]:
-  // object-store-safe, snapshot-isolated, measured faster at scale);
-  // the rename/hive-tree protocol stays available behind the explicit
-  // [[graft.store.IndexProtocol.Rename]] flag for deployments that
-  // need a plain hive layout. Both protocols run identical semantics
-  // over identical merged rows — the `*_mf` gates pin hash equality
-  // against the rename twins' oracles.
+  // ---- index lifecycle facades ----
+  // Build / maintain / probe entry points for the three materialized
+  // ANN index families (IVF, IVF-PQ, LSH). Every index lives in a
+  // versioned-manifest store ([[graft.store.ManifestStore]]): commits
+  // publish immutable segments, probes read a snapshot pruned at the
+  // manifest level.
 
-  import graft.store.IndexProtocol
-
-  /** Build an LSH index at `rootPath` under the selected protocol:
-    * Manifest (default) → [[writeLshIndexManifest]]'s two-table store;
-    * Rename → [[writeLshIndex]]'s plain hive tree. */
+  /** Build an LSH index at `rootPath`: [[writeLshIndexManifest]]'s
+    * two-table store (postings + vectors). */
   def buildLshIndex(s: SparkSession, emb: DataFrame, rootPath: String,
-      planes: Int = 4, bands: Int = 8,
-      protocol: IndexProtocol = IndexProtocol.Default): Unit =
-    protocol match {
-      case IndexProtocol.Manifest =>
-        writeLshIndexManifest(s, emb, rootPath, planes, bands)
-      case IndexProtocol.Rename =>
-        writeLshIndexOn(emb, rootPath, planes, bands)
-    }
+      planes: Int = 4, bands: Int = 8): Unit =
+    writeLshIndexManifest(s, emb, rootPath, planes, bands)
 
-  /** Incremental LSH maintenance under the selected protocol —
-    * [[lshCompactManifest]] (default) or [[lshCompact]]. Identical
-    * frozen-hyperplane semantics and `upsertById` contract; returns
-    * the touched (band, bucket) pairs. */
+  /** Incremental LSH maintenance ([[lshCompactManifest]]): frozen
+    * hyperplanes, `upsertById` re-delivery idempotence; returns the
+    * touched (band, bucket) pairs. */
   def maintainLshIndex(s: SparkSession, rootPath: String,
       arriving: DataFrame, planes: Int = 4, bands: Int = 8,
-      upsertById: Boolean = false,
-      protocol: IndexProtocol = IndexProtocol.Default): Seq[(Int, Int)] =
-    protocol match {
-      case IndexProtocol.Manifest =>
-        lshCompactManifest(s, rootPath, arriving, planes, bands, upsertById)
-      case IndexProtocol.Rename =>
-        lshCompact(s, rootPath, arriving, planes, bands,
-          upsertById = upsertById)
-    }
+      upsertById: Boolean = false): Seq[(Int, Int)] =
+    lshCompactManifest(s, rootPath, arriving, planes, bands, upsertById)
 
-  /** LSH probe under the selected protocol — [[lshProbeManifest]]
-    * (default, manifest-pruned) or [[lshProbeIndexed]] (DPP-pruned
-    * hive scan). Row-identical on the same index content. */
+  /** Query-relation LSH probe ([[lshProbeManifest]], manifest-pruned);
+    * row-identical to [[lshProbeIndexed]] on the same index content. */
   def probeLshIndex(s: SparkSession, rootPath: String,
-      queries: DataFrame, k: Int = 10, planes: Int = 4, bands: Int = 8,
-      protocol: IndexProtocol = IndexProtocol.Default): DataFrame =
-    protocol match {
-      case IndexProtocol.Manifest =>
-        lshProbeManifest(s, rootPath, queries, k, planes, bands)
-      case IndexProtocol.Rename =>
-        lshProbeIndexed(s, rootPath, queries, k, planes, bands)
-    }
+      queries: DataFrame, k: Int = 10, planes: Int = 4,
+      bands: Int = 8): DataFrame =
+    lshProbeManifest(s, rootPath, queries, k, planes, bands)
 
   /** Build an IVF index from an assigned (vec_id, embedding, cell)
-    * relation. Manifest (default): the cell-keyed manifest store at
-    * `rootPath`. Rename: the hive `cell=` tree at `rootPath/vectors`
-    * plus the stored centroid table the hive probe lanes read
-    * (`rootPath/centroids`). */
+    * relation: the cell-keyed manifest store at `rootPath`. `trained`
+    * is the frozen centroid model the relation was assigned under; the
+    * store keeps no copy of it — maintenance and probes take it as an
+    * argument. */
   def buildIvfIndex(s: SparkSession, rootPath: String,
-      assigned: DataFrame, trained: Array[(Int, Array[Double])],
-      protocol: IndexProtocol = IndexProtocol.Default): Unit =
-    protocol match {
-      case IndexProtocol.Manifest =>
-        graft.store.ManifestStore.create(s, rootPath, assigned, "cell")
-      case IndexProtocol.Rename =>
-        assigned
-          .transform(graft.plans.Writers.byKeysN(_, trained.length,
-            col("cell")))
-          .write.mode("overwrite").partitionBy("cell")
-          .option("compression", "zstd").parquet(s"$rootPath/vectors")
-        import s.implicits._
-        trained.toSeq.map { case (c, v) => (c.toLong, v.toSeq) }
-          .toDF("cent_id", "centroid")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$rootPath/centroids")
-    }
+      assigned: DataFrame, trained: Array[(Int, Array[Double])]): Unit =
+    graft.store.ManifestStore.create(s, rootPath, assigned, "cell")
 
-  /** Incremental IVF maintenance under the selected protocol —
-    * [[ivfCompactManifest]] (default) or [[ivfCompact]] against the
-    * `rootPath/vectors` hive tree. Identical frozen-centroid and
-    * `upsertById` semantics; returns the touched cell ids. */
+  /** Incremental IVF maintenance ([[ivfCompactManifest]]): frozen
+    * centroids, `upsertById` re-delivery idempotence; returns the
+    * touched cell ids. */
   def maintainIvfIndex(s: SparkSession, rootPath: String,
       arriving: DataFrame, trained: Array[(Int, Array[Double])],
-      upsertById: Boolean = false,
-      protocol: IndexProtocol = IndexProtocol.Default): Seq[Int] =
-    protocol match {
-      case IndexProtocol.Manifest =>
-        ivfCompactManifest(s, rootPath, arriving, trained, upsertById)
-      case IndexProtocol.Rename =>
-        ivfCompact(s, s"$rootPath/vectors", arriving, trained,
-          upsertById = upsertById)
-    }
+      upsertById: Boolean = false): Seq[Int] =
+    ivfCompactManifest(s, rootPath, arriving, trained, upsertById)
 
-  /** Query-relation IVF probe under the selected protocol. Both lanes
-    * ride the ONE [[probeBatchOn]] plan; the Manifest default prunes
-    * at the manifest level (the probed cells' distinct set is
-    * centroid-bounded driver metadata), the Rename lane through the
-    * hive scan's dynamic partition pruning. */
+  /** Query-relation IVF probe: the ONE [[probeBatchOn]] plan over the
+    * manifest snapshot, pruned at the manifest level (the probed cells'
+    * distinct set is centroid-bounded driver metadata). */
   def probeIvfIndex(s: SparkSession, rootPath: String,
       queries: DataFrame, trained: Array[(Int, Array[Double])],
       k: Int = 10, nProbe: Int = 4, excludeSelf: Boolean = false,
-      broadcastProbes: Boolean = true,
-      protocol: IndexProtocol = IndexProtocol.Default): DataFrame = {
+      broadcastProbes: Boolean = true): DataFrame = {
     val centsL = trained.map { case (c, v) => (c.toLong, v) }
-    protocol match {
-      case IndexProtocol.Manifest =>
-        // rank ONCE: localCheckpoint the ranked probes, derive the
-        // manifest-pruning keys from the materialized relation, and
-        // feed the same relation to the join — the k×dim ranking
-        // projection never evaluates twice, even on a bulk query
-        // relation (lifetime is GC-managed, no manual unpersist)
-        val probes = rankedProbesOf(queries, centsL, nProbe)
-          .localCheckpoint(true)
-        val cells = probes.select("cell").distinct()
-          .collect().map(_.getInt(0).toString).toSeq.sorted
-        val pruned = graft.store.ManifestStore.read(s, rootPath,
-          Some(cells))
-        probeBatchOn(pruned, centsL, queries, k, nProbe,
-          excludeSelf, broadcastProbes, probesPre = Some(probes))
-      case IndexProtocol.Rename =>
-        graft.store.IndexCommit.recoverForRead(s, s"$rootPath/vectors")
-        probeIndexBatchOn(s.read.parquet(s"$rootPath/vectors"), centsL,
-          queries, k, nProbe, excludeSelf, broadcastProbes)
-    }
+    // rank ONCE: localCheckpoint the ranked probes, derive the
+    // manifest-pruning keys from the materialized relation, and feed
+    // the same relation to the join — the k×dim ranking projection
+    // never evaluates twice, even on a bulk query relation (lifetime
+    // is GC-managed, no manual unpersist)
+    val probes = rankedProbesOf(queries, centsL, nProbe)
+      .localCheckpoint(true)
+    val cells = probes.select("cell").distinct()
+      .collect().map(_.getInt(0).toString).toSeq.sorted
+    val pruned = graft.store.ManifestStore.read(s, rootPath, Some(cells))
+    probeBatchOn(pruned, centsL, queries, k, nProbe, excludeSelf,
+      broadcastProbes, probesPre = Some(probes))
   }
 
-  /** Build an IVF-PQ codes index under the selected protocol:
-    * Manifest (default) → [[writeIvfPqIndexManifestOn]]; Rename →
-    * [[writeIvfPqIndexOn]]'s hive `cell=` tree. */
+  /** Build an IVF-PQ codes index ([[writeIvfPqIndexManifestOn]]). */
   def buildIvfPqIndex(s: SparkSession, emb: DataFrame,
       cents: Array[(Int, Array[Double])],
-      cb: Array[Array[Array[Double]]], rootPath: String,
-      protocol: IndexProtocol = IndexProtocol.Default): Unit =
-    protocol match {
-      case IndexProtocol.Manifest =>
-        writeIvfPqIndexManifestOn(s, emb, cents, cb, rootPath)
-      case IndexProtocol.Rename =>
-        writeIvfPqIndexOn(emb, cents, cb, rootPath)
-    }
+      cb: Array[Array[Array[Double]]], rootPath: String): Unit =
+    writeIvfPqIndexManifestOn(s, emb, cents, cb, rootPath)
 
-  /** Incremental IVF-PQ maintenance under the selected protocol —
-    * [[ivfPqCompactManifest]] (default; carries `upsertById`) or
-    * [[ivfPqCompact]]. Returns the touched cell ids. */
+  /** Incremental IVF-PQ maintenance ([[ivfPqCompactManifest]]). Returns
+    * the touched cell ids. */
   def maintainIvfPqIndex(s: SparkSession, rootPath: String,
       arriving: DataFrame, cents: Array[(Int, Array[Double])],
-      cb: Array[Array[Array[Double]]],
-      protocol: IndexProtocol = IndexProtocol.Default): Seq[Int] =
-    protocol match {
-      case IndexProtocol.Manifest =>
-        ivfPqCompactManifest(s, rootPath, arriving, cents, cb)
-      case IndexProtocol.Rename =>
-        ivfPqCompact(s, rootPath, arriving, cents, cb)
-    }
+      cb: Array[Array[Array[Double]]]): Seq[Int] =
+    ivfPqCompactManifest(s, rootPath, arriving, cents, cb)
 
-  /** Query-relation IVF-PQ probe under the selected protocol —
-    * [[ivfPqProbeManifestBatch]] (default) or
-    * [[ivfPqProbeIndexedBatch]]; shared ADC math, bit-identical rows
-    * on the same index content. */
+  /** Query-relation IVF-PQ probe ([[ivfPqProbeManifestBatch]]); the ADC
+    * math is shared with [[ivfPqProbeIndexedBatch]], so the rows are
+    * bit-identical on the same index content. */
   def probeIvfPqIndex(s: SparkSession, dir: String, rootPath: String,
       queries: DataFrame, k: Int = 10, nProbe: Int = 3,
       excludeSelf: Boolean = true, broadcastProbes: Boolean = true,
-      protocol: IndexProtocol = IndexProtocol.Default,
       model: Option[(Array[(Int, Array[Double])],
         Array[Array[Array[Double]]])] = None): DataFrame =
-    protocol match {
-      case IndexProtocol.Manifest =>
-        ivfPqProbeManifestBatch(s, dir, rootPath, queries, k, nProbe,
-          excludeSelf, broadcastProbes, model)
-      case IndexProtocol.Rename =>
-        ivfPqProbeIndexedBatch(s, dir, rootPath, queries, k, nProbe,
-          excludeSelf, broadcastProbes, model)
-    }
+    ivfPqProbeManifestBatch(s, dir, rootPath, queries, k, nProbe,
+      excludeSelf, broadcastProbes, model)
 
   /** Embedding near-duplicate pairs above a cosine threshold — the
     * embedding analog of MinHash near-dup dedup, and shaped the same way

@@ -4,30 +4,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Versioned-manifest table layout — the "table-format answer" the
-  * [[IndexCommit]] protocol's scaladoc points at, built library-sized.
-  *
-  * [[IndexCommit]] mutates a live tree in place behind a redo-logged
-  * transaction; its commit point is an atomic file RENAME and its apply
-  * phase MOVES partition directories. That buys crash-atomicity for
-  * heal-then-scan readers, but two limits are structural:
-  *
-  *  - a scan already in flight during the apply can observe a partition
-  *    mid-swap (absent / FileNotFound) — the same window Spark's own
-  *    dynamic partition overwrite has;
-  *  - the protocol dies on flat-namespace object stores (`s3a`/`gs`),
-  *    where rename is a per-object COPY and the marker rename loses its
-  *    atomicity — hence IndexCommit's fail-fast capability gate.
-  *
-  * This module removes both by never mutating published data at all
-  * (the Iceberg/Delta idea, reduced to what an index store needs):
+/** Versioned-manifest table layout: every commit publishes immutable
+  * files under a versioned metadata record (the Iceberg/Delta idea,
+  * reduced to what an index or mart store needs).
   *
   * {{{
   *   <root>/_manifests/v00000001.mf     immutable, line-oriented
   *   <root>/_manifests/v00000002.mf
   *   <root>/seg/<segId>/<key>=<v>/...   immutable data segments
-  *   <root>/_WRITER                     writer lease (IndexCommit's
-  *                                      lock machinery, same seams)
+  *   <root>/_WRITER                     writer lease ([[Lease]])
   * }}}
   *
   * A manifest file IS a store version: the authoritative list of
@@ -43,22 +28,20 @@ import org.apache.spark.sql.functions._
   * `vN+1.mf` key, which is atomic on every store this library meets:
   * one small-file rename on rename-atomic schemes, and a single PUT on
   * object stores (an object is invisible until its PUT completes, and
-  * the only rename here is of one manifest-sized file, never data).
-  * There is deliberately NO [[IndexCommit.requireAtomicRename]] gate.
+  * the only rename here is of one manifest-sized file, never data), so
+  * flat-namespace object stores (`s3a`/`gs`) are supported as is.
   *
   * What readers get, stated precisely:
   *
   *  - SNAPSHOT ISOLATION, lock-free: a reader resolves the newest
   *    manifest once and scans immutable directories. A concurrent
   *    commit cannot perturb it — there is no mid-swap window to
-  *    observe, which retires the in-flight-scan caveat IndexCommit has
-  *    to document. No reader-side healing exists because none is
-  *    needed: a writer crash before the manifest create leaves only an
-  *    unreferenced segment (invisible; [[vacuum]] reaps it), and after
-  *    the create the commit is simply durable. Multi-table commits are
+  *    observe. Readers never need recovery: a writer crash before the
+  *    manifest create leaves only an unreferenced segment (invisible;
+  *    [[vacuum]] reaps it), and after the create the commit is simply
+  *    durable. Multi-table commits are
   *    atomic BY the same token: a reader sees postings-new with
-  *    vectors-new or postings-old with vectors-old, never a mix —
-  *    without any redo log or healing lock.
+  *    vectors-new or postings-old with vectors-old, never a mix.
   *  - TIME TRAVEL: any retained version is readable (`version =`),
   *    because old manifests and the segments they reference stay put
   *    until [[vacuum]] retires them past the retention horizon.
@@ -80,18 +63,16 @@ import org.apache.spark.sql.functions._
   * and are never partition-pruned or merged — the narrow vector store
   * shape, hydrated by id join.
   *
-  * Concurrency: ONE writer at a time via the same per-root writer
-  * lease as [[IndexCommit]] (write-then-verify, lease-steal, the
-  * `WriterLeaseMs`/`WriterWaitMs` seams). [[commitTables]] runs the
-  * caller's planning closure UNDER the lease, so guard reads (e.g. the
-  * upsert-dedup anti-join against the live vectors table) and the
-  * staged writes see a store no concurrent writer can move — the same
-  * guarantee lshCompact gets from opening its IndexCommit transaction
-  * before its guard reads. The manifest create is the backstop: it
-  * refuses to overwrite an existing version file (loser loud on
-  * rename-atomic schemes) and verifies its own publish by read-back
-  * (which NARROWS — not closes — the double-grant window on
-  * overwriting stores; see [[writeManifest]] for the precise
+  * Concurrency: ONE writer at a time via the per-root writer [[Lease]].
+  * [[commitTables]] runs the caller's planning closure UNDER the lease,
+  * so guard reads (e.g. the upsert-dedup anti-join against the live
+  * vectors table) and the staged writes see a store no concurrent
+  * writer can move. Every commit releases the lease in a `finally`, so
+  * a failed commit never holds the store for a lease term. The manifest
+  * create is the backstop: it refuses to overwrite an existing version
+  * file (loser loud on rename-atomic schemes) and verifies its own
+  * publish by read-back (which NARROWS — not closes — the double-grant
+  * window on overwriting stores; see [[writeManifest]] for the precise
   * statement). [[vacuum]] runs under the same lease, which is what
   * makes "unreferenced segment" mean "dead" (no writer can be
   * mid-stage while the lease is held); retention (`keepLast`) is the
@@ -99,12 +80,11 @@ import org.apache.spark.sql.functions._
   * longest-running scan, exactly Delta's VACUUM discipline.
   *
   * Cost shape at scale: a commit writes the touched partitions' bytes
-  * (the same bytes IndexCommit staged) plus ONE manifest file — O(live
-  * partitions) lines of driver-side metadata, no data moves, no apply
-  * phase, no healing. Reads pay one small-file GET to resolve the
-  * newest manifest. Manifest size is the honest limit: at millions of
-  * partitions a real table format's manifest TREES take over; the
-  * index stores here hold k-to-thousands of cells/buckets.
+  * plus ONE manifest file — O(live partitions) lines of driver-side
+  * metadata; no published data moves. Reads pay one small-file GET to
+  * resolve the newest manifest. Manifest size is the honest limit: at
+  * millions of partitions a real table format's manifest TREES take
+  * over; the index stores here hold k-to-thousands of cells/buckets.
   *
   * Partition keys must be non-null and are matched by their hive
   * directory rendering (for the integer cell keys and the `b_b`
@@ -391,10 +371,11 @@ object ManifestStore {
   /** Table name the single-table sugar API stores under. */
   private val DefaultTable = "t"
 
-  /** Kill-point hook for the crash spec — same seam discipline as
-    * [[IndexCommit.killPoint]]: "staged" fires after every new segment
-    * is fully written (manifest not yet published), "committed" after
-    * the manifest create. Never set outside specs. */
+  /** Kill-point hook for the crash spec: "create-preflight" fires in
+    * [[createTables]] before the lease is taken, "staged" after every
+    * new segment is fully written (manifest not yet published),
+    * "committed" after the manifest create. A throwing hook models the
+    * writer dying there. Never set outside specs. */
   private[graft] var killPoint: String => Unit = _ => ()
 
   /** Race seam for the publish-verification spec: fires between the
@@ -403,12 +384,12 @@ object ManifestStore {
     * specs. */
   private[graft] var beforePublishRename: () => Unit = () => ()
 
-  /** Driver-phase timing seam for the scoped profiling tool
-    * ([[graft.tools.ManifestProfile]]): receives (phase, nanos) for
-    * each driver-side phase of a commit — "lease", "manifestRead",
-    * "keyCollect", "stageWrite", "publish" — so the per-commit driver
-    * overhead the task metrics cannot see is attributable. A no-op
-    * outside profiling runs. */
+  /** Driver-phase timing seam, set by the benchmark's traced runs
+    * (`perfbench/src/main/scala/graft/perfbench/Trace.scala`): receives
+    * (phase, nanos) for each driver-side phase of a commit — "lease",
+    * "manifestRead", "keyCollect", "stageWrite", "publish" — so the
+    * per-commit driver overhead the task metrics cannot see is
+    * attributable. A no-op outside traced runs. */
   private[graft] var phaseHook: (String, Long) => Unit = (_, _) => ()
   @inline private def phased[T](phase: String)(f: => T): T = {
     val t0 = System.nanoTime()
@@ -426,33 +407,6 @@ object ManifestStore {
   private def manifestDir(root: Path) = new Path(root, ManifestDirName)
   private def manifestPath(root: Path, v: Long) =
     new Path(manifestDir(root), f"v$v%08d.mf")
-  private def writerLock(root: Path) =
-    new Path(root, IndexCommit.WriterLockName)
-
-  private def acquireLease(fs: FileSystem, root: Path): String = {
-    // a fresh store root may not exist yet (create()'s first act is
-    // taking the lease) — the lock file needs its parent in place
-    if (!fs.exists(root)) fs.mkdirs(root)
-    IndexCommit.acquireLock(fs, writerLock(root), () => true,
-      IndexCommit.WriterLeaseMs, IndexCommit.WriterWaitMs)
-      .getOrElse(throw new IllegalStateException(
-        s"writer-lease acquisition under $root returned empty — " +
-          "the store root cannot be retired"))
-  }
-
-  private def releaseLease(fs: FileSystem, root: Path,
-      token: String): Unit = {
-    val lock = writerLock(root)
-    val owner =
-      try {
-        val in = fs.open(lock)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-        finally in.close()
-      } catch { case _: java.io.IOException => None }
-    if (owner.contains(token))
-      try fs.delete(lock, false)
-      catch { case _: java.io.IOException => () }
-  }
 
   /** Newest committed version under `root`; None when the store has no
     * manifest yet (not initialized, or a crash preceded [[create]]'s
@@ -542,8 +496,8 @@ object ManifestStore {
     * API cannot express. The backstop therefore NARROWS the
     * double-grant window; actual mutual exclusion is the writer lease,
     * and a double-granted lease is already the pathological state the
-    * lease machinery (write-then-verify, heartbeat, O_EXCL create)
-    * exists to prevent. */
+    * [[Lease]] (O_EXCL create, owner-checked release) exists to
+    * prevent. */
   private def writeManifest(fs: FileSystem, root: Path, v: Long,
       partCols: Map[String, String], entries: Seq[Entry]): Unit =
     phased("publish") {
@@ -1223,7 +1177,7 @@ object ManifestStore {
         "it, or point createTables() at a fresh root")
     if (currentVersion(fs, r).nonEmpty) refuse()
     killPoint("create-preflight")
-    val token = acquireLease(fs, r)
+    val token = Lease.acquire(fs, r)
     try {
       // re-check UNDER the lease: a racing first-writer that committed
       // v1 between the fast check above and our lease acquisition must
@@ -1254,7 +1208,7 @@ object ManifestStore {
         tables.map(t => t._1.name -> rawSpecOf(t._1)).toMap, entries)
       killPoint("committed")
       1L
-    } finally releaseLease(fs, r, token)
+    } finally Lease.release(fs, r, token)
   }
 
   /** Initialize a single-table store (sugar over [[createTables]] with
@@ -1266,10 +1220,9 @@ object ManifestStore {
   /** One ATOMIC commit across any number of tables. The `plan` closure
     * runs UNDER the writer lease — its reads (e.g. [[readTable]] for an
     * upsert-dedup guard) see a store no concurrent writer can move
-    * before this commit lands, the same guarantee the IndexCommit lanes
-    * get by opening their transaction before their guard reads. An
-    * empty plan (or one whose ops all reduce to nothing: empty upsert
-    * batches, empty appends) commits nothing and bumps no version.
+    * before this commit lands. An empty plan (or one whose ops all
+    * reduce to nothing: empty upsert batches, empty appends) commits
+    * nothing and bumps no version.
     *
     * Returns the touched partition keys per upserted table (hive
     * rendering, sorted; append tables report no keys). */
@@ -1282,7 +1235,7 @@ object ManifestStore {
       maintenance: Maintenance)
       (plan: => Seq[TableOp]): Map[String, Seq[String]] = {
     val (fs, r) = fsOf(s, root)
-    val token = phased("lease")(acquireLease(fs, r))
+    val token = phased("lease")(Lease.acquire(fs, r))
     try {
       val v = currentVersion(fs, r).getOrElse(
         throw new IllegalStateException(
@@ -1544,7 +1497,7 @@ object ManifestStore {
       // retention under the SAME lease window (no second acquisition)
       maintenance.vacuumKeepLast.foreach(k => vacuumLocked(fs, r, k))
       touched
-    } finally releaseLease(fs, r, token)
+    } finally Lease.release(fs, r, token)
   }
 
   /** Single-table upsert (sugar over [[commitTables]] with the default
@@ -1836,9 +1789,9 @@ object ManifestStore {
   def vacuum(s: SparkSession, root: String, keepLast: Int): Seq[String] = {
     require(keepLast >= 1, "vacuum must keep at least the newest version")
     val (fs, r) = fsOf(s, root)
-    val token = acquireLease(fs, r)
+    val token = Lease.acquire(fs, r)
     try vacuumLocked(fs, r, keepLast)
-    finally releaseLease(fs, r, token)
+    finally Lease.release(fs, r, token)
   }
 
   /** [[vacuum]]'s body, for callers that ALREADY hold the writer lease

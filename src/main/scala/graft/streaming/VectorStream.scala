@@ -179,130 +179,40 @@ object VectorStream {
   /** STREAMING INDEX MAINTENANCE — the write-side production shape
     * completing [[runAnnIndexedOnce]]'s read side: vector batches
     * ARRIVE as files (an embedding job's continuous output) and each
-    * micro-batch merges into the stored `cell=`-partitioned IVF index
-    * through [[graft.operators.Similarity.ivfCompact]]'s touched-cell
-    * rewrite, with `upsertById = true` so the merge is IDEMPOTENT
-    * under re-delivery (merge∘merge = merge) — which is the whole
-    * exactly-once story here: Structured Streaming commits source
-    * offsets AFTER `foreachBatch` returns, so a crash-restart replays
-    * the last micro-batch, and an idempotent merge makes that replay
-    * invisible (no batchId bookkeeping needed; the U1
-    * load∘load = load discipline applied to index storage).
-    *
-    * Static-side discipline as every run-once lane: centroids are
-    * trained ONCE before the stream starts (frozen — maintenance
-    * never retrains) and passed into every merge as k×dim metadata;
-    * per-trigger work is the arriving batch's assignment plus a
-    * partition-pruned read/rewrite of its touched cells, never an
-    * index scan.
-    *
-    * Gate contract (the ann_ivf_compact closed form): the base index
-    * holds only the historical slice (vec_id % 10 != 3); the arriving
-    * drop (the % 10 == 3 slice PLUS planted copies of the `n` probe
-    * seeds) reaches the index ONLY through the streamed merges; after
-    * the stream drains, each probe must recover its planted copy at
-    * rank 1 with cosine ~1.0 through the stored partition-pruned
-    * lane, and the full top-k must equal the from-scratch rebuild
-    * reference (`agrees_rebuild`) probed through the identical batch
-    * plan. */
-  def runIvfCompactOnce(s: SparkSession, srcDir: String, n: Int = 5,
-      k: Int = 10, nProbe: Int = 4): DataFrame = {
-    import graft.operators.Similarity
-    val emb = graft.Tables.load(s, srcDir, "embeddings")
-    val isBatch = col("vec_id") % 10 === 3
-    val arriving = emb.filter(isBatch).unionByName(
-      emb.filter(col("vec_id") < n)
-        .withColumn("vec_id", col("vec_id") + Dedup.PlantOffset))
-    val idxDir = HourlyStream.scratchDir("graft_ivfcs_idx_")
-    val dropDir = HourlyStream.scratchDir("graft_ivfcs_drop_")
-    // the whole static-side chain (Lloyd training collects + the
-    // base-index write it feeds) and the drop staging are independent
-    // — overlap the chain, not just the final write (guide §2.6)
-    val (trained, _) = graft.operators.Par.two(
-      {
-        // static side: frozen trained centroids, collected once
-        val tr = Similarity.collectCentroids(
-          Similarity.kmeansIterate(s, srcDir, 2), "cluster")
-        emb.filter(!isBatch)
-          .select(col("vec_id"), col("embedding"),
-            Similarity.argmaxOver(tr).getField("cluster").as("cell"))
-          .transform(graft.plans.Writers.byKeysN(_, tr.length,
-            col("cell")))
-          .write.mode("overwrite").partitionBy("cell")
-          .option("compression", "zstd").parquet(s"$idxDir/vectors")
-        tr
-      },
-      arriving
-        .coalesce(2) // pinned drop-file count: 2 micro-batches at any SF
-        .write.mode("overwrite").parquet(dropDir))
-    val ckpt = HourlyStream.scratchDir("graft_ivfcs_ckpt_")
-    val q = readVectorBatches(s, dropDir)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val _ = Similarity.ivfCompact(s, s"$idxDir/vectors", b, trained,
-          upsertById = true)
-      }
-      .start()
-    try q.awaitTermination() finally q.stop()
-    // probe the compacted index and the rebuild reference through the
-    // IDENTICAL one-join batch plan; both sides are k-row metadata
-    val centsL = trained.map { case (c, v) => (c.toLong, v) }
-    val queries = emb.filter(col("vec_id") < n)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    def keyed(df: DataFrame): Map[Long, Seq[(Long, Double)]] =
-      df.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .groupBy(_._1)
-        .map { case (qid, rows) =>
-          qid -> rows.sortBy(_._4).map(t => (t._2, t._3)).toSeq
-        }
-    val (stored, rebuild) = graft.operators.Par.two(
-      keyed(Similarity.probeIndexBatchOn(
-        s.read.parquet(s"$idxDir/vectors"), centsL, queries,
-        k, nProbe, excludeSelf = true)),
-      keyed(Similarity.probeIndexBatchOn(
-        emb.filter(!isBatch).unionByName(arriving)
-          .select(col("vec_id"), col("embedding"),
-            Similarity.argmaxOver(trained).getField("cluster").as("cell")),
-        centsL, queries, k, nProbe, excludeSelf = true)))
-    val rows = (0L until n.toLong).map { qid =>
-      val b = stored(qid)
-      (qid, b.head._1, 1, b.head._2 >= 0.999999, b == rebuild(qid))
-    }
-    val out = s.createDataFrame(rows)
-      .toDF("q_id", "vec_id", "rn", "is_exact", "agrees_rebuild")
-      .orderBy("q_id")
-      .localCheckpoint(true)
-    Seq(idxDir, dropDir, ckpt).foreach(HourlyStream.reapScratch)
-    out
-  }
-
-  /** [[runIvfCompactOnce]] over a [[graft.store.ManifestStore]] — the
-    * streaming write side of the versioned-manifest index: each
     * micro-batch lands as ONE manifest commit
     * ([[graft.operators.Similarity.ivfCompactManifest]] with
     * `upsertById = true`), so
     *
     *  - a crash-restart replay commits a new version with IDENTICAL
-    *    content (the anti-join drops every re-delivered row before the
-    *    merge) — the same merge∘merge = merge exactly-once story as
-    *    the hive lane, now with the replay also visible as a version
-    *    in the store's history;
+    *    content: Structured Streaming commits source offsets AFTER
+    *    `foreachBatch` returns, so a restart replays the last
+    *    micro-batch, and the upsert's anti-join drops every re-delivered
+    *    row before the merge (merge∘merge = merge — no batchId
+    *    bookkeeping needed);
     *  - concurrent probes NEVER observe a partition mid-rewrite: they
     *    resolve whichever manifest was newest when they planned
-    *    (snapshot isolation), where the hive lane's foreachBatch
-    *    rewrite has the documented in-flight-scan window;
+    *    (snapshot isolation);
     *  - after the stream drains, every intermediate index state stays
     *    time-travel-readable until vacuumed — the operational story a
     *    production index wants (probe the pre-batch version while
     *    validating the post-batch one).
     *
-    * Same gate contract and closed form as [[runIvfCompactOnce]]: the
-    * planted copies reach the index only through the streamed manifest
-    * commits; rank-1 recovery plus rebuild equality through the
-    * identical batch probe plan. */
+    * Static-side discipline as every run-once lane: centroids are
+    * trained ONCE before the stream starts (frozen — maintenance never
+    * retrains) and passed into every merge as k×dim metadata;
+    * per-trigger work is the arriving batch's assignment plus a
+    * manifest-pruned read/rewrite of its touched cells, never an index
+    * scan.
+    *
+    * Gate contract (`stream_ivf_compact` / `stream_ivf_compact_mf`, the
+    * ann_ivf_compact closed form): the base index holds only the
+    * historical slice (vec_id % 10 != 3); the arriving drop (the
+    * % 10 == 3 slice PLUS planted copies of the `n` probe seeds)
+    * reaches the index ONLY through the streamed commits; after the
+    * stream drains, each probe must recover its planted copy at rank 1
+    * with cosine ~1.0, and the full top-k must equal the from-scratch
+    * rebuild reference (`agrees_rebuild`) probed through the identical
+    * batch plan. */
   def runIvfCompactManifestOnce(s: SparkSession, srcDir: String,
       n: Int = 5, k: Int = 10, nProbe: Int = 4): DataFrame = {
     import graft.operators.Similarity
@@ -377,10 +287,9 @@ object VectorStream {
     out
   }
 
-  /** Streaming IVF-PQ maintenance over the manifest store — the last
-    * cell of the protocol × family × cadence matrix (LSH and IVF have
-    * streamed lanes; this is the CODES-level one, on the round-13
-    * default protocol): each micro-batch is encoded by the shared
+  /** Streaming IVF-PQ maintenance over the manifest store — the
+    * CODES-level sibling of [[runIvfCompactManifestOnce]]: each
+    * micro-batch is encoded by the shared
     * [[graft.operators.Similarity.pqEncodeOn]] projection and lands as
     * ONE manifest commit ([[graft.operators.Similarity.ivfPqCompactManifest]]
     * with `upsertById = true` — re-delivered rows are replaced, not

@@ -77,7 +77,7 @@ class FsScratchSpec extends AnyFunSuite {
       "explicit file:-scheme FS handle") {
     val root = localRoot()
     withScratchConf(s"file:$root") {
-      val rows = Similarity.ivfCompactPlanted(s, sf, n = 3).collect()
+      val rows = Similarity.ivfCompactManifestPlanted(s, sf, n = 3).collect()
       assert(rows.length === 3)
       rows.foreach { r =>
         assert(r.getBoolean(3), s"planted copy must come back exact: $r")

@@ -4,12 +4,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.store.{IndexCommit, ManifestStore}
+import org.apache.hadoop.fs.Path
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
-/** Contract spec for the versioned-manifest store (round-12: the
-  * object-store-honest commit path [[graft.store.IndexCommit]]'s
-  * scaladoc points at). The protocol claims four things IndexCommit
-  * cannot give, and each gets a direct test:
+import graft.store.{Lease, ManifestStore}
+
+/** Contract spec for the versioned-manifest store. The protocol claims
+  * four things, and each gets a direct test:
   *
   *  - NO mid-swap window: a scan resolved BEFORE a commit collects the
   *    identical rows AFTER it — published data never moves;
@@ -21,8 +23,11 @@ import graft.store.{IndexCommit, ManifestStore}
   *    named partitions' leaf dirs (asserted on `inputFiles`).
   *
   * Plus the shared maintenance contracts: upsert == rebuild,
-  * upsertById re-delivery idempotence, empty-batch no-op, crashed
-  * writer's lease stolen by the next writer, vacuum retention. */
+  * upsertById re-delivery idempotence, empty-batch no-op, the writer
+  * [[graft.store.Lease]] (a crashed writer's lease stolen, a failed
+  * commit's released at once, release owner-checked), vacuum
+  * retention, and a property over random commit sequences killed at
+  * every kill point. */
 class ManifestStoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
@@ -93,8 +98,8 @@ class ManifestStoreSpec extends AnyFunSuite {
     // the commit landed (current reader sees it)...
     assert(contents(ManifestStore.read(spark, root)).size === 80)
     // ...and the in-flight scan still collects exactly the old snapshot
-    // — the guarantee IndexCommit's apply-phase directory swaps cannot
-    // give a scan that resolved before the marker
+    // — published data never moves, so a scan that resolved before the
+    // commit has no mid-swap window to observe
     assert(contents(inflight) === contents(base))
   }
 
@@ -180,16 +185,111 @@ class ManifestStoreSpec extends AnyFunSuite {
       === contents(base.unionByName(rows(40 until 60, "b"))))
   }
 
+  /** One generated commit for the kill-point property: a CDC merge
+    * (upserts plus tombstones, distinct ids) or a partition
+    * replacement. Ids live in 0..15 and `part = id % 4`, so a tombstone
+    * always carries its live row's key. */
+  private sealed trait GenOp
+  private case class MergeOp(upserts: Seq[Int], tombstones: Seq[Int])
+      extends GenOp
+  private case class ReplaceOp(ids: Seq[Int]) extends GenOp
+
+  private val genOp: Gen[GenOp] = Gen.oneOf(
+    for {
+      nu <- Gen.choose(1, 4)
+      ups <- Gen.pick(nu, 0 until 16)
+      nt <- Gen.choose(0, 3)
+      dels <- Gen.pick(nt, 0 until 16)
+    } yield MergeOp(ups.toSeq.sorted, dels.toSeq.filterNot(ups.contains).sorted),
+    for {
+      n <- Gen.choose(1, 4)
+      ids <- Gen.pick(n, 0 until 16)
+    } yield ReplaceOp(ids.toSeq.sorted))
+
+  test("random mergeInto/replacePartitions sequences killed at " +
+      "create-preflight, staged and committed: reads see exactly the " +
+      "old or the new version, and the next writer always proceeds") {
+    import spark.implicits._
+    type Rows = Set[(Long, Int, String)]
+    def killedAt(point: String)(body: => Any): Unit = {
+      ManifestStore.killPoint = p =>
+        if (p == point) throw new RuntimeException(s"KILLED@$p")
+      try {
+        val e = intercept[RuntimeException](body)
+        assert(e.getMessage === s"KILLED@$point")
+      } finally ManifestStore.killPoint = _ => ()
+    }
+    // the commit each op runs, and the model of the version it makes
+    def plan(root: String, op: GenOp, tag: String,
+        old: Rows): (() => Seq[String], Rows) = op match {
+      case MergeOp(ups, dels) =>
+        val src = (ups.map(i => (i.toLong, i % 4, s"$tag-$i", "U")) ++
+          dels.map(i => (i.toLong, i % 4, "x", "D")))
+          .toDF("id", "part", "v", "_op")
+        val ids = (ups ++ dels).map(_.toLong).toSet
+        (() => ManifestStore.mergeInto(spark, root, src, "id",
+          deleteWhen = Some(col("_op") === "D"), envelope = Seq("_op")),
+          old.filterNot(r => ids(r._1)) ++
+            ups.map(i => (i.toLong, i % 4, s"$tag-$i")))
+      case ReplaceOp(ids) =>
+        val parts = ids.map(_ % 4).toSet
+        val df = ids.map(i => (i.toLong, i % 4, s"$tag-$i"))
+          .toDF("id", "part", "v")
+        (() => ManifestStore.replacePartitions(spark, root, df, "part"),
+          old.filterNot(r => parts(r._2)) ++
+            ids.map(i => (i.toLong, i % 4, s"$tag-$i")))
+    }
+    val prevWait = Lease.WriterWaitMs
+    Lease.WriterWaitMs = 2000 // a leaked lease fails the next writer fast
+    try {
+      val runs = Gen.listOfN(3, Gen.listOfN(3, genOp))
+        .pureApply(Gen.Parameters.default, Seed(20261018L))
+      var cases = 0
+      runs.zipWithIndex.foreach { case (ops, run) =>
+        val root = tempDir(s"mf-prop-$run-")
+        val base = rows(0 until 8, "a")
+        killedAt("create-preflight")(
+          ManifestStore.create(spark, root, base, "part"))
+        assert(ManifestStore.currentVersion(spark, root) === None)
+        ManifestStore.create(spark, root, base, "part")
+        var model = contents(base)
+        ops.zipWithIndex.foreach { case (op, step) =>
+          val v = ManifestStore.currentVersion(spark, root).get
+          val (commit, next) = plan(root, op, s"s$run.$step", model)
+          val at = s"run=$run step=$step op=$op"
+          killedAt("staged")(commit())
+          assert(ManifestStore.currentVersion(spark, root) === Some(v), at)
+          assert(contents(ManifestStore.read(spark, root)) === model, at)
+          killedAt("committed")(commit())
+          assert(ManifestStore.currentVersion(spark, root) === Some(v + 1),
+            at)
+          assert(contents(ManifestStore.read(spark, root)) === next, at)
+          assert(contents(ManifestStore.read(spark, root,
+            version = Some(v))) === model, s"$at: old version moved")
+          model = next
+          cases += 1
+        }
+        val r = new Path(root)
+        assert(Lease.owner(r.getFileSystem(
+          spark.sessionState.newHadoopConf()), r) === None)
+      }
+      assert(cases === 9, s"property exercised only $cases cases")
+    } finally {
+      ManifestStore.killPoint = _ => ()
+      Lease.WriterWaitMs = prevWait
+    }
+  }
+
   test("crashed writer's expired lease is stolen by the next writer") {
     val root = tempDir("mf-lease-steal")
     ManifestStore.create(spark, root, rows(0 until 8, "a"), "part")
     // model a crashed writer: a lease file nobody will release,
     // backdated past WriterLeaseMs so it is steal-eligible
-    val lock = java.nio.file.Paths.get(root, IndexCommit.WriterLockName)
+    val lock = java.nio.file.Paths.get(root, Lease.WriterLockName)
     java.nio.file.Files.write(lock, "dead-writer".getBytes("UTF-8"))
     java.nio.file.Files.setLastModifiedTime(lock,
       java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - IndexCommit.WriterLeaseMs - 60000))
+        System.currentTimeMillis() - Lease.WriterLeaseMs - 60000))
     ManifestStore.upsertPartitions(spark, root, rows(8 until 12, "b"), "part")
     assert(contents(ManifestStore.read(spark, root)).size === 12)
     assert(!java.nio.file.Files.exists(lock)) // released by the thief
@@ -198,10 +298,10 @@ class ManifestStoreSpec extends AnyFunSuite {
   test("a live lease blocks a second writer loudly past the wait bound") {
     val root = tempDir("mf-lease-busy")
     ManifestStore.create(spark, root, rows(0 until 8, "a"), "part")
-    val lock = java.nio.file.Paths.get(root, IndexCommit.WriterLockName)
+    val lock = java.nio.file.Paths.get(root, Lease.WriterLockName)
     java.nio.file.Files.write(lock, "live-writer".getBytes("UTF-8"))
-    val oldWait = IndexCommit.WriterWaitMs
-    IndexCommit.WriterWaitMs = 250
+    val oldWait = Lease.WriterWaitMs
+    Lease.WriterWaitMs = 250
     try {
       val e = intercept[IllegalStateException] {
         ManifestStore.upsertPartitions(spark, root,
@@ -209,9 +309,56 @@ class ManifestStoreSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("busy"))
     } finally {
-      IndexCommit.WriterWaitMs = oldWait
+      Lease.WriterWaitMs = oldWait
       java.nio.file.Files.deleteIfExists(lock)
     }
+  }
+
+  test("a commit that fails with a NonFatal error releases the lease at " +
+      "once: the next writer gets in without waiting out WriterWaitMs") {
+    val root = tempDir("mf-lease-fail")
+    val base = rows(0 until 8, "a")
+    ManifestStore.create(spark, root, base, "part")
+    // a planning-closure failure and a failing staged Spark write (the
+    // transient mid-stage error a real batch hits)
+    intercept[IllegalStateException] {
+      ManifestStore.commitTables(spark, root)(
+        throw new IllegalStateException("plan failed"))
+    }
+    intercept[Exception] {
+      ManifestStore.upsertPartitions(spark, root,
+        rows(8 until 12, "b").withColumn("v", raise_error(lit("boom"))),
+        "part")
+    }
+    val lock = java.nio.file.Paths.get(root, Lease.WriterLockName)
+    assert(!java.nio.file.Files.exists(lock),
+      "a failed commit must not leave its lease behind")
+    assert(ManifestStore.currentVersion(spark, root) === Some(1L))
+    val oldWait = Lease.WriterWaitMs
+    Lease.WriterWaitMs = 250 // a leaked lease would fail this writer
+    try ManifestStore.upsertPartitions(spark, root, rows(8 until 12, "b"),
+      "part")
+    finally Lease.WriterWaitMs = oldWait
+    assert(contents(ManifestStore.read(spark, root))
+      === contents(base.unionByName(rows(8 until 12, "b"))))
+  }
+
+  test("lease release is owner-checked: a holder whose lease was stolen " +
+      "leaves the thief's lease in place") {
+    val root = new Path(tempDir("mf-lease-owner"))
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val stale = Lease.acquire(fs, root)
+    assert(Lease.owner(fs, root) === Some(stale))
+    // the holder stalls past its lease; the next writer steals it
+    fs.setTimes(new Path(root, Lease.WriterLockName),
+      System.currentTimeMillis() - Lease.WriterLeaseMs - 60000, -1)
+    val thief = Lease.acquire(fs, root)
+    assert(thief !== stale)
+    assert(Lease.owner(fs, root) === Some(thief))
+    Lease.release(fs, root, stale) // the stalled holder wakes up
+    assert(Lease.owner(fs, root) === Some(thief))
+    Lease.release(fs, root, thief)
+    assert(Lease.owner(fs, root) === None)
   }
 
   test("concurrent writers serialize on the lease; both batches land") {
@@ -850,8 +997,6 @@ class ManifestStoreSpec extends AnyFunSuite {
       "store, and concurrent default-path maintenance serializes to " +
       "the sequential result") {
     import graft.operators.Similarity
-    import graft.store.IndexProtocol
-    assert(IndexProtocol.Default === IndexProtocol.Manifest)
     val emb = Tables.load(spark, TestSpark.sf, "embeddings")
     val base = emb.filter(col("vec_id") % 10 =!= 3)
     val b1 = emb.filter(col("vec_id") % 20 === 3)
@@ -871,8 +1016,7 @@ class ManifestStoreSpec extends AnyFunSuite {
     Similarity.maintainLshIndex(spark, seqRoot, b2)
     // concurrent maintenance on the default path: the writer lease
     // serializes the two disjoint batches; both land, content equals
-    // the sequential run (the IndexCommitSpec serialization guarantee,
-    // re-pinned on the library default)
+    // the sequential run
     val conRoot = tempDir("mf-facade-con")
     Similarity.buildLshIndex(spark, base, conRoot)
     import scala.concurrent.{Await, Future}
@@ -883,16 +1027,6 @@ class ManifestStoreSpec extends AnyFunSuite {
     Await.result(f1, 180.seconds); Await.result(f2, 180.seconds)
     assert(ManifestStore.currentVersion(spark, conRoot) === Some(3L))
     assert(snapshot(conRoot) === snapshot(seqRoot))
-  }
-
-  test("ivfPqCompactManifestPlanted: the commit protocol changes no " +
-      "row — manifest gate equals the rename gate's relation") {
-    val rename = graft.operators.Similarity
-      .ivfPqCompactPlanted(spark, sf).collect().toSeq
-    val manifest = graft.operators.Similarity
-      .ivfPqCompactManifestPlanted(spark, sf).collect().toSeq
-    assert(manifest === rename)
-    assert(manifest.nonEmpty)
   }
 
   test("segment column stats: footer-harvested min/max are exact, " +
@@ -1430,8 +1564,8 @@ class ManifestStoreSpec extends AnyFunSuite {
     assert(row.getLong(1) > 0)
   }
 
-  /** Recursive (relative path → (length, content hash)) inventory —
-    * the IndexCommitSpec discipline for byte-level immutability. */
+  /** Recursive (relative path → (length, content hash)) inventory, for
+    * byte-level immutability checks. */
   private def inventory(root: String): Map[String, (Long, Long)] = {
     val base = java.nio.file.Paths.get(root)
     if (!java.nio.file.Files.exists(base)) return Map.empty

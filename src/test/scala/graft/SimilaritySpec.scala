@@ -500,189 +500,11 @@ class SimilaritySpec extends AnyFunSuite {
       "lifecycle must delete its scratch index directory")
   }
 
-  test("ivfCompact rewrites ONLY the touched cell partitions and merges " +
-      "old with new rows") {
-    import spark.implicits._
-    def fileSigs(p: String): Set[(String, Long)] =
-      Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.length())).toSet
-    // 2-cell world: centroids on the axes, base index one vector per cell
-    val trained = Array((0, Array(1.0, 0.0)), (1, Array(0.0, 1.0)))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfc_spec_").toString + "/vectors"
-    Seq((10L, Seq(0.9f, 0.1f), 0), (11L, Seq(0.1f, 0.9f), 1))
-      .toDF("vec_id", "embedding", "cell")
-      .write.partitionBy("cell").parquet(dir)
-    val before0 = fileSigs(s"$dir/cell=0")
-    val before1 = fileSigs(s"$dir/cell=1")
-    assert(before0.nonEmpty && before1.nonEmpty)
-    // arriving vector points at e1 -> only cell 1 is touched
-    val touched = Similarity.ivfCompact(spark, dir,
-      Seq((12L, Seq(0.2f, 0.8f))).toDF("vec_id", "embedding"), trained)
-    assert(touched === Seq(1))
-    assert(fileSigs(s"$dir/cell=0") === before0,
-      "untouched cell partition must keep its exact files")
-    assert(fileSigs(s"$dir/cell=1") !== before1,
-      "touched cell partition must be rewritten")
-    val back = spark.read.parquet(dir).select("vec_id", "cell")
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(back === Set((10L, 0), (11L, 1), (12L, 1)),
-      "compaction must merge the touched cell's old rows with the new")
-  }
-
-  test("ivfCompact upsertById is idempotent: replaying the same arriving " +
-      "batch leaves the index row set unchanged (merge∘merge = merge)") {
-    import spark.implicits._
-    val trained = Array((0, Array(1.0, 0.0)), (1, Array(0.0, 1.0)))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfu_spec_").toString + "/vectors"
-    Seq((10L, Seq(0.9f, 0.1f), 0), (11L, Seq(0.1f, 0.9f), 1))
-      .toDF("vec_id", "embedding", "cell")
-      .write.partitionBy("cell").parquet(dir)
-    val batch = Seq((12L, Seq(0.2f, 0.8f))).toDF("vec_id", "embedding")
-    def rowSet(): Set[(Long, Int)] =
-      spark.read.parquet(dir).select("vec_id", "cell")
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    Similarity.ivfCompact(spark, dir, batch, trained, upsertById = true)
-    val once = rowSet()
-    assert(once === Set((10L, 0), (11L, 1), (12L, 1)))
-    // a crash-restart re-delivers the SAME micro-batch: replay must not
-    // duplicate (the streaming lane's exactly-once argument)
-    Similarity.ivfCompact(spark, dir, batch, trained, upsertById = true)
-    assert(rowSet() === once,
-      "replaying the identical batch must be a no-op on the row set")
-    assert(spark.read.parquet(dir).count() === 3L,
-      "no duplicate physical rows after replay")
-  }
-
-  test("lshCompact rewrites ONLY the touched (band,bucket) partitions, " +
-      "merges postings, and appends the vector store") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, posexplode}
-    def dirSigs(root: String): Map[String, Set[(String, Long)]] = {
-      val base = new java.io.File(s"$root/postings")
-      Option(base.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("band="))
-        .flatMap(b => Option(b.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.startsWith("bucket="))
-          .map(k => s"${b.getName}/${k.getName}" ->
-            k.listFiles().filter(_.getName.endsWith(".parquet"))
-              .map(f => (f.getName, f.length())).toSet))
-        .toMap
-    }
-    val dim = 8
-    def vec(seed: Int): Seq[Float] =
-      (0 until dim).map(i => math.sin(seed * 31 + i * 7).toFloat)
-    val baseEmb = Seq((10L, vec(1)), (11L, vec(2)), (12L, vec(3)))
-      .toDF("vec_id", "embedding")
-    val arriving = Seq((13L, vec(4))).toDF("vec_id", "embedding")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_lshc_spec_").toString
-    Similarity.writeLshIndexOn(baseEmb, root, 4, 8)
-    val before = dirSigs(root)
-    assert(before.nonEmpty)
-    val touched = Similarity.lshCompact(spark, root, arriving, 4, 8)
-    assert(touched.size === 8,
-      "one arriving vector touches exactly `bands` partitions")
-    val touchedDirs = touched
-      .map { case (b, k) => s"band=$b/bucket=$k" }.toSet
-    val after = dirSigs(root)
-    val untouchedBefore = before.filter { case (d, _) =>
-      !touchedDirs.contains(d) }
-    assert(untouchedBefore.nonEmpty,
-      "fixture must leave at least one pre-existing partition untouched")
-    untouchedBefore.foreach { case (d, sigs) =>
-      assert(after(d) === sigs,
-        s"untouched partition $d must keep its exact files")
-    }
-    before.keySet.intersect(touchedDirs).foreach { d =>
-      assert(after(d) !== before(d),
-        s"touched pre-existing partition $d must be rewritten")
-    }
-    // merged postings == signatures of the full corpus
-    val expect = baseEmb.unionByName(arriving)
-      .select(col("vec_id"), posexplode(
-        graft.functions.SketchExpressions.hyperplaneBands(
-          col("embedding"), 4, 8)).as(Seq("band", "bucket")))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val got = spark.read.parquet(s"$root/postings")
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2).toLong)).toSet
-    assert(got === expect,
-      "merged postings must equal the full corpus' banded signatures")
-    val vecsBack = spark.read.parquet(s"$root/vectors")
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(vecsBack === Set(10L, 11L, 12L, 13L),
-      "vector store must append the arriving batch")
-  }
-
-  test("LSH compaction gate: planted copies arriving ONLY via the batch " +
-      "surface at rank 1, and every probe equals the in-memory rebuild") {
-    val got = Similarity.lshCompactPlanted(spark, TestSpark.sf).collect()
-    assert(got.length === 5)
-    got.zipWithIndex.foreach { case (r, i) =>
-      assert(r.getLong(0) === i.toLong)
-      assert(r.getLong(1) === i.toLong + graft.operators.Dedup.PlantOffset,
-        "rank-1 hit must be the batch-arrived planted copy")
-      assert(r.getInt(2) === 1)
-      assert(r.getBoolean(3), "planted copy must probe as exact")
-      assert(r.getBoolean(4), "compacted top-k must equal rebuild top-k")
-    }
-  }
-
-  test("ivfPqCompact rewrites ONLY the touched cell partitions of the " +
-      "codes store and merges frozen-codebook encodings") {
-    import spark.implicits._
-    def fileSigs(p: String): Set[(String, Long)] =
-      Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.length())).toSet
-    // 2-cell world in the real 4x16 PQ geometry: centroids are the two
-    // 32-dim half-space indicators; codebook entry c of every subspace
-    // is the constant-c vector, so a constant-m subvector encodes to
-    // code m with distance 0 (unique argmin — no tie ambiguity)
-    val cents = Array(
-      (0, Array.tabulate(64)(i => if (i < 32) 1.0 else 0.0)),
-      (1, Array.tabulate(64)(i => if (i < 32) 0.0 else 1.0)))
-    val cb = Array.fill(Similarity.PqM)(
-      Array.tabulate(Similarity.PqK)(c =>
-        Array.fill(Similarity.PqSub)(c.toDouble)))
-    def vec(m: Seq[Int]): Seq[Float] =
-      m.flatMap(v => Seq.fill(Similarity.PqSub)(v.toFloat))
-    val base = Seq(
-      (10L, vec(Seq(4, 4, 1, 1))),  // mass in dims 0..31 -> cell 0
-      (11L, vec(Seq(1, 1, 4, 4)))).toDF("vec_id", "embedding")
-    val arriving = Seq((12L, vec(Seq(0, 1, 6, 7))))
-      .toDF("vec_id", "embedding") // mass in dims 32..63 -> cell 1
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_pqc_spec_").toString
-    Similarity.writeIvfPqIndexOn(base, cents, cb, root)
-    val before0 = fileSigs(s"$root/codes/cell=0")
-    val before1 = fileSigs(s"$root/codes/cell=1")
-    assert(before0.nonEmpty && before1.nonEmpty)
-    val touched = Similarity.ivfPqCompact(spark, root, arriving, cents, cb)
-    assert(touched === Seq(1),
-      "the arriving vector's frozen argmax lands in cell 1 only")
-    assert(fileSigs(s"$root/codes/cell=0") === before0,
-      "untouched cell partition must keep its exact files")
-    assert(fileSigs(s"$root/codes/cell=1") !== before1,
-      "touched cell partition must be rewritten")
-    val back = spark.read.parquet(s"$root/codes")
-      .select("vec_id", "cell", "c0", "c1", "c2", "c3")
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getInt(4), r.getInt(5))).toSet
-    assert(back === Set(
-      (10L, 0, 4, 4, 1, 1), (11L, 1, 1, 1, 4, 4), (12L, 1, 0, 1, 6, 7)),
-      "merged codes must be the full corpus under the frozen codebooks")
-  }
-
   test("IVF-PQ compaction gate equals a from-scratch rebuild of the " +
       "planted corpus probed through the identical batch lane") {
     import spark.implicits._
     val sf = TestSpark.sf
-    val gate = Similarity.ivfPqCompactPlanted(spark, sf).collect()
+    val gate = Similarity.ivfPqCompactManifestPlanted(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
         r.getDouble(3), r.getInt(4))).toSeq
     val emb = graft.Tables.load(spark, sf, "embeddings")
@@ -707,20 +529,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(gate.map(_._1).distinct === Seq(0L, 1L, 2L, 3L, 4L))
     assert(gate.groupBy(_._1).values.forall(_.map(_._5).sorted == (1 to 10)),
       "each query must carry a dense rank 1..10")
-  }
-
-  test("IVF compaction gate: planted copies arriving ONLY via the batch " +
-      "surface at rank 1, and every probe equals the from-scratch rebuild") {
-    val got = Similarity.ivfCompactPlanted(spark, TestSpark.sf).collect()
-    assert(got.length === 5)
-    got.zipWithIndex.foreach { case (r, i) =>
-      assert(r.getLong(0) === i.toLong)
-      assert(r.getLong(1) === i.toLong + graft.operators.Dedup.PlantOffset,
-        "rank-1 hit must be the batch-arrived planted copy")
-      assert(r.getInt(2) === 1)
-      assert(r.getBoolean(3), "planted copy must probe as exact")
-      assert(r.getBoolean(4), "compacted top-k must equal rebuild top-k")
-    }
   }
 
   test("cosine: ragged lengths and null elements propagate NULL") {

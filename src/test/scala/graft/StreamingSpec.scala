@@ -658,7 +658,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streamed IVF index maintenance: planted copies reach the stored " +
       "index only through micro-batch merges, probe equals rebuild") {
     val rows = graft.streaming.VectorStream
-      .runIvfCompactOnce(spark, TestSpark.sf).collect()
+      .runIvfCompactManifestOnce(spark, TestSpark.sf).collect()
     assert(rows.length === 5)
     rows.zipWithIndex.foreach { case (r, i) =>
       assert(r.getLong(0) === i.toLong)
@@ -672,7 +672,7 @@ class StreamingSpec extends AnyFunSuite {
     val tmp = new java.io.File(
       System.getProperty("java.io.tmpdir")).listFiles()
     assert(tmp == null ||
-      !tmp.exists(_.getName.startsWith("graft_ivfcs_")),
+      !tmp.exists(_.getName.startsWith("graft_ivfmfs_")),
       "maintenance stream lane must reap its scratch dirs")
   }
 
@@ -680,19 +680,19 @@ class StreamingSpec extends AnyFunSuite {
       "empty drop file merges as a byte-identical no-op and the " +
       "stream goes on to land the real batch") {
     import graft.operators.Similarity
+    import graft.store.ManifestStore
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.col
     val emb = Tables.load(spark, TestSpark.sf, "embeddings")
     val trained = Similarity.collectCentroids(
       Similarity.kmeansIterate(spark, TestSpark.sf, 1), "cluster")
     val idxDir = java.nio.file.Files
-      .createTempDirectory("graft_ivfce_idx_").toString
-    emb.filter(col("vec_id") % 10 =!= 3)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.argmaxOver(trained).getField("cluster").as("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$idxDir/vectors")
+      .createTempDirectory("graft_ivfce_idx_").toString + "/store"
+    ManifestStore.create(spark, idxDir,
+      emb.filter(col("vec_id") % 10 =!= 3)
+        .select(col("vec_id"), col("embedding"),
+          Similarity.argmaxOver(trained).getField("cluster").as("cell")),
+      "cell")
     val dropDir = java.nio.file.Files
       .createTempDirectory("graft_ivfce_drop_").toString
     // drop 1: schema-correct but ZERO rows — the legitimate trigger
@@ -705,7 +705,7 @@ class StreamingSpec extends AnyFunSuite {
       .coalesce(1).write.mode("append").parquet(dropDir)
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft_ivfce_ckpt_").toString
-    val before = spark.read.parquet(s"$idxDir/vectors").count()
+    val before = ManifestStore.read(spark, idxDir).count()
     val touched = scala.collection.mutable.ArrayBuffer.empty[Int]
     val q = graft.streaming.VectorStream
       .readVectorBatches(spark, dropDir)
@@ -713,20 +713,20 @@ class StreamingSpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (b: DataFrame, _: Long) =>
-        touched ++= Similarity.ivfCompact(spark, s"$idxDir/vectors", b,
+        touched ++= Similarity.ivfCompactManifest(spark, idxDir, b,
           trained, upsertById = true)
         ()
       }
       .start()
     try q.awaitTermination() finally q.stop()
-    // the empty micro-batch contributed no touched cells and no crash
-    // (pre-fix lshCompact's sibling threw on empty.reduce); the real
-    // batch landed exactly once
+    // the empty micro-batch contributed no touched cells, no crash and
+    // no version; the real batch landed exactly once, as version 2
     val expected = emb.filter(col("vec_id") % 10 === 3).count()
-    assert(spark.read.parquet(s"$idxDir/vectors").count()
-      === before + expected)
+    assert(ManifestStore.read(spark, idxDir).count() === before + expected)
+    assert(ManifestStore.versions(spark, idxDir) === Seq(1L, 2L),
+      "the empty micro-batch must commit no version")
     assert(touched.nonEmpty, "the real batch must have touched cells")
-    Seq(idxDir, dropDir, ckpt).foreach(d =>
+    Seq(new java.io.File(idxDir).getParent, dropDir, ckpt).foreach(d =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
   }
 
